@@ -7,8 +7,8 @@ HEADLINE_LINE_BUDGET):
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"q01_...": sec, ...}, "queries_min": {...},
    "runs": 3, "sf": 0.1, "calibration_factor": ..., ...}
-The bulky calibration payload (raw pin samples, old-base continuity)
-prints on a separate earlier line and the full record is also written
+The bulky calibration payload (raw pin samples) prints on a
+separate earlier line and the full record is also written
 to BENCH_CALIB.json beside this file.
 
 Each query is timed to full materialization (count of the result),
@@ -130,30 +130,6 @@ NORMALIZED_BAND_BY_SF = {
     5.0: (56.2, 68.5),
 }
 
-# Previous-generation bases, kept for the continuity fields
-# (``*_oldbase``: local mechanism against these; ``*_legacy``:
-# endpoint mechanism against these — the exact semantics r5–r10 rows
-# carry). r5 for sf0.1, r9 for sf5. Never update these: they are the
-# fixed reference the old-vs-new mapping in BENCH_NOTES
-# §Recalibration is expressed against.
-OLD_CALIBRATION_PINS_BY_SF = {
-    0.1: {
-        "q01_pricing_summary": 0.473,
-        "q08_join_multiway": 0.916,
-        "d01_exact_dedup": 0.246,
-        "t05_token_count": 0.179,
-        "v01_cosine_topk": 0.423,
-    },
-    5.0: {
-        "q01_pricing_summary": 1.759,
-        "q08_join_multiway": 10.650,
-        "d01_exact_dedup": 0.813,
-        "t05_token_count": 0.197,
-        "v01_cosine_topk": 1.497,
-    },
-}
-
-
 # How many suite queries run between interleaved pin samples. Wider
 # at sf5 because one pin-set pass costs ~15 s there (q08 alone is
 # ~10.6 s) vs ~2.2 s at sf0.1.
@@ -180,10 +156,9 @@ def _pin_sample(spark, sf_dir: str, pins: dict, registry) -> dict:
     warmth and still reflects sustained external load, which slows
     both runs.
 
-    Returns the RAW per-pin times (r12): ratio-making moved into
-    ``calibration`` so one run can be normalized against both the
-    current bases and the previous generation's (the continuity row
-    VERDICT r11 item 1 requires when bases are re-derived)."""
+    Returns the RAW per-pin times (r12): ratio-making lives in
+    ``calibration``, so a recalibration campaign can re-normalize a
+    recorded run against candidate bases offline."""
     times: dict[str, float] = {}
     for name in pins:
         fn = registry.QUERIES[name]
@@ -227,19 +202,15 @@ def calibration(
     queries that ran inside it — the failure mode of the r5–r10
     endpoint mechanism, where the pins sampled one time window and
     BENCH_r10 normalized above-band on a bursty box while three solo
-    runs were flat. The chronological samples, the global
-    median-sample factor, and the r5–r10-style endpoint factor
-    (``*_legacy``) are all emitted so the mechanisms stay
-    cross-checkable (BENCH_NOTES §Interleaved local calibration).
+    runs were flat. The chronological samples and the global
+    median-sample factor are emitted alongside (BENCH_NOTES
+    §Interleaved local calibration).
     """
     pins = CALIBRATION_PINS_BY_SF.get(sf)
-    old_pins = OLD_CALIBRATION_PINS_BY_SF.get(sf)
     if pins is None or not set(HEADLINE) <= set(timings):
         return {}
     if not all(n in timings for n in pins):
         return {}
-    legacy = sorted(timings[n] / pin for n, pin in old_pins.items())
-    legacy_cal = legacy[len(legacy) // 2]  # median: robust to one outlier
     out = {
         # raw per-pin sample times (r12): lets a recalibration
         # campaign re-normalize recorded runs against CANDIDATE bases
@@ -253,59 +224,44 @@ def calibration(
         # band comparisons across rounds could silently mix the two
         # definitions. Schema 2 = interleaved-local over the r12 pin
         # bases; rows without the field are schema 1 (endpoint, r5/r9
-        # bases). Downstream checks must compare within one schema —
-        # the old-vs-new mapping lives in BENCH_NOTES §Recalibration.
-        # *_legacy keeps its historical meaning exactly: endpoint
-        # factor against the OLD (r5/r9) bases, comparable with
-        # r5–r10 rows.
+        # bases, kept in the committed BENCH_r*.json). Downstream
+        # checks must compare within one schema — the old-vs-new
+        # mapping lives in BENCH_NOTES §Recalibration.
         "calibration_schema": 2,
-        "calibration_factor_legacy": round(legacy_cal, 3),
-        "value_normalized_legacy": round(total / legacy_cal, 3),
     }
     if len(samples) >= 2 and groups:
-        n_groups = max(groups.values()) + 1
+        facs = [_sample_factor(s, pins) for s in samples]
 
-        def emit(tag: str, base: dict[str, float]) -> None:
-            facs = [_sample_factor(s, base) for s in samples]
+        # group g is bracketed by samples[g] (taken just before it)
+        # and samples[g+1]; a missing tail sample falls back to the
+        # last one available
+        def local(g: int) -> float:
+            lo = facs[min(g, len(facs) - 1)]
+            hi = facs[min(g + 1, len(facs) - 1)]
+            return (lo * hi) ** 0.5
 
-            # group g is bracketed by samples[g] (taken just before
-            # it) and samples[g+1]; a missing tail sample falls back
-            # to the last one available
-            def local(g: int) -> float:
-                lo = facs[min(g, len(facs) - 1)]
-                hi = facs[min(g + 1, len(facs) - 1)]
-                return (lo * hi) ** 0.5
-
-            norm_total = sum(t / local(groups[n]) for n, t in timings.items())
-            out.update(
-                {
-                    f"calibration_factor{tag}": round(statistics.median(facs), 3),
-                    f"value_normalized{tag}": round(norm_total, 3),
-                    f"calibration_samples{tag}": [round(s, 3) for s in facs],
-                }
-            )
-            if not tag:
-                band = NORMALIZED_BAND_BY_SF.get(sf)
-                if band:
-                    out["calibration_band"] = list(band)
-                out.update(
-                    {
-                        "calibration_groups": n_groups,
-                        # a sub-minute burst between two samples is
-                        # UNRECOVERABLE at this sampling granularity
-                        # (no mechanism can know which of a query's 3
-                        # repeats it hit) — but it IS detectable.
-                        # Flagged runs should be discounted and re-run
-                        # rather than trusted.
-                        "calibration_burst_detected": max(facs) / min(facs) > 1.5,
-                    }
-                )
-
-        emit("", pins)
-        if old_pins is not pins:
-            # continuity: the same run under the previous bases, same
-            # (local) mechanism — comparable with the r11 rows
-            emit("_oldbase", old_pins)
+        norm_total = sum(t / local(groups[n]) for n, t in timings.items())
+        out.update(
+            {
+                "calibration_factor": round(statistics.median(facs), 3),
+                "value_normalized": round(norm_total, 3),
+                "calibration_samples": [round(s, 3) for s in facs],
+            }
+        )
+        band = NORMALIZED_BAND_BY_SF.get(sf)
+        if band:
+            out["calibration_band"] = list(band)
+        out.update(
+            {
+                "calibration_groups": max(groups.values()) + 1,
+                # a sub-minute burst between two samples is
+                # UNRECOVERABLE at this sampling granularity (no
+                # mechanism can know which of a query's 3 repeats it
+                # hit) — but it IS detectable. Flagged runs should be
+                # discounted and re-run rather than trusted.
+                "calibration_burst_detected": max(facs) / min(facs) > 1.5,
+            }
+        )
     else:  # pins apply but sampling was disabled — fall back
         fallback = sorted(timings[n] / pin for n, pin in pins.items())
         fb = fallback[len(fallback) // 2]
@@ -330,22 +286,14 @@ def calibration(
 # window with margin for the line-boundary scan.
 HEADLINE_LINE_BUDGET = 1900
 
-# Fields whose size grows with sample count / pin count, or that exist
-# only for cross-generation continuity — never on the final line.
-# Everything here is recoverable from BENCH_CALIB.json and the detail
-# stdout line.
-DETAIL_KEYS = (
-    "calibration_pin_raw",
-    "calibration_factor_oldbase",
-    "value_normalized_oldbase",
-    "calibration_samples_oldbase",
-    "calibration_factor_legacy",
-    "value_normalized_legacy",
-)
+# Fields whose size grows with sample count / pin count — never on
+# the final line. Everything here is recoverable from BENCH_CALIB.json
+# and the detail stdout line.
+DETAIL_KEYS = ("calibration_pin_raw",)
 
 
 def split_record(out: dict) -> tuple[dict, dict]:
-    """(headline, detail): detail takes the bulky/continuity fields,
+    """(headline, detail): detail takes the bulky fields,
     headline keeps everything a band comparison needs (metric, value,
     queries, queries_min, factor, normalized, band, schema, burst)."""
     detail = {k: out[k] for k in DETAIL_KEYS if k in out}

@@ -386,7 +386,8 @@ def q66_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-merge regime the optimizer ELIDES it outright — the SMJ
     # output is already l_orderkey-partitioned; B/C plans verified
     # byte-identical under autoBroadcastJoinThreshold=-1.
-    # Interleaved A/B/C (tools/q66_ab.py; identity collect-checked):
+    # Interleaved A/B/C (OPTIMIZATION_r17.md item 1; identity
+    # collect-checked):
     # sf0.1 medians A(collect_list) 0.868 / B(r15) 0.797 / C(this)
     # 0.716; sf5 A 13.92 / B 12.70 / C 8.84.
     per_os = (

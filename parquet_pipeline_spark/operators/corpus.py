@@ -100,7 +100,8 @@ def span_dedup(
     # document row with the exact explode_spans slicing expressions,
     # so the output is row-identical (pinned by the t18 SQL oracle,
     # the span_dedup property tests, and an exact 250k-row A/B at sf5:
-    # tools/t18_ab.py — sf5 medians 1.392→1.166, sf0.1 a wash).
+    # OPTIMIZATION_r17.md item 7 — sf5 medians 1.392→1.166, sf0.1 a
+    # wash).
     # Precondition (unchanged from the old form's groupBy semantics):
     # ``id_col`` is a key — one row per document.
     n = int(span_words)

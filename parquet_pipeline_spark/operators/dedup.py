@@ -559,7 +559,7 @@ def minhash_near_dups(
     join-strategy lever: the inner verify join applies the same id
     equality afterwards, so the output is row-identical either way
     (pinned by the oracle rows of d07/d14 that flow through here and
-    the d03 byte-identity A/B in tools/d03_ab.py).
+    the d03 byte-identity A/B in OPTIMIZATION_r17.md item 4).
 
     The shingle arrays are computed ONCE into a persisted
     (id, grams) projection shared by candidate generation and both
@@ -903,7 +903,8 @@ def connected_components(
     # and without this checkpoint every iteration's joins + the
     # convergence count re-run that pipeline 2-3× per round — measured
     # 39 s for a 5k-doc corpus at sf0.1 vs ~2 s with the pin
-    # (tools/persisted_probe.py, r9)
+    # (BENCH_NOTES.md §r8-registration probes + persisted-index
+    # refresh, r9)
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(

@@ -425,7 +425,8 @@ def t08_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 HOF-audit rewrite: the old transform(...)-then-explode form
     # paid one interpreted lambda invocation per bigram just to build
     # an array that was immediately exploded (12.8 → 8.0 s on the
-    # full sf5 corpus; exceptAll-equal, tools/hof_audit.py). The
+    # full sf5 corpus; exceptAll-equal, BENCH_NOTES.md §HOF
+    # classification sweep). The
     # size >= 2 filter replaces the old empty-array guard: 0/1-token
     # docs emit no bigrams either way, and sequence(1, 0) would
     # descend under ANSI.

@@ -129,12 +129,9 @@ def test_table_diff_quantization_documented_and_tunable(spark):
 # (3) comparator signed-zero normalization after formatting
 # ---------------------------------------------------------------------------
 def test_comparator_normalizes_tiny_negative_to_zero():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
     import importlib
 
-    import check_oracle
+    from tools import check_oracle
 
     importlib.reload(check_oracle)
     import pandas as pd
@@ -152,13 +149,11 @@ def test_comparator_sig_digits_mode_keeps_tiny_magnitudes():
     ('±1e-20') — the normalization must NOT erase a real magnitude,
     only signs of strings that parse back to zero."""
     import importlib
-    import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tools import check_oracle
+
     os.environ["ORACLE_SIG_DIGITS"] = "9"
     try:
-        import check_oracle
-
         importlib.reload(check_oracle)
         import pandas as pd
 
@@ -166,8 +161,6 @@ def test_comparator_sig_digits_mode_keeps_tiny_magnitudes():
         assert a[0][0] == "-1e-20"
     finally:
         del os.environ["ORACLE_SIG_DIGITS"]
-        import check_oracle
-
         importlib.reload(check_oracle)
 
 

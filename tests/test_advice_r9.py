@@ -7,11 +7,12 @@ recurse through a NULL-source group via IS NOT DISTINCT FROM —
 matching Spark's groupBy, which puts all NULL keys in one group,
 (3) connected_components(strict=True) RAISES on non-convergence so
 an oracle-gated caller fails loudly instead of handing a silently
-split labeling to a hash gate, (4) the dirty-dims battery selects
+split labeling to a hash gate, (4) the dirty-table batteries select
 oracles by word-boundary regex (substring probes dropped `part,` /
-`part)` / trailing `FROM part`), (5) bench calibration is emitted
-only for the full default HEADLINE composition at sf0.1 — subset
-runs aren't comparable to the pinned full-suite medians.
+`part)` / trailing `FROM part`, or matched aliases like `n_orders`),
+(5) bench calibration is emitted only for the full default HEADLINE
+composition at sf0.1 — subset runs aren't comparable to the pinned
+full-suite medians.
 """
 
 from __future__ import annotations
@@ -133,13 +134,40 @@ def test_mmr_oracle_anchor_uses_quantized_order():
 
 
 # ---------------------------------------------------------------------------
-# (4) dims battery word-boundary oracle selection
+# (4) dirty-table batteries' word-boundary oracle selection
 # ---------------------------------------------------------------------------
 def test_dims_probe_word_boundary(monkeypatch):
     from parquet_pipeline_spark import registry
-    from tools.adversarial_dims_check import dim_touching_oracled
+    from tools.adversarial_tables import dirty_tables, oracled_touching
 
     registry.load_all()
+    # the aliases exact_orders / n_orders name no table: the orders
+    # battery must skip these queries, the lineitem battery they do
+    # read must keep them
+    alias_only = {"a11_hll_accuracy", "q04_global_aggs", "q100_basket_pairs"}
+    assert alias_only.isdisjoint(oracled_touching(dirty_tables("orders")))
+    assert alias_only <= set(oracled_touching(dirty_tables("lineitem")))
+
+    tables = dirty_tables("all")
+    assert set(tables) == {
+        "documents", "embeddings", "lineitem", "events", "orders",
+        "customer", "supplier", "part",
+    }
+    for table in tables:
+        fake = {
+            "hit_comma": f"SELECT 1 FROM {table}, nation",
+            "hit_paren": f"SELECT 1 FROM (SELECT * FROM {table})",
+            "hit_eos": f"SELECT 1 FROM {table}",
+            "hit_upper": f"SELECT 1 FROM {table.upper()}",
+            "miss_col": f"SELECT x_{table}key FROM region",
+            "miss_substr": f"SELECT 1 FROM {table}supp_like",
+            "miss_alias": f"SELECT COUNT(*) AS n_{table} FROM nation",
+        }
+        monkeypatch.setattr(registry, "ORACLES", fake)
+        got = set(oracled_touching([table]))
+        assert got == {"hit_comma", "hit_paren", "hit_eos", "hit_upper"}, table
+
+    # a column name with a dimension's name inside it reads no dimension
     fake = {
         "hit_comma": "SELECT 1 FROM part, nation",
         "hit_paren": "SELECT 1 FROM (SELECT * FROM part)",
@@ -149,8 +177,19 @@ def test_dims_probe_word_boundary(monkeypatch):
         "miss_substr": "SELECT 1 FROM partsupp_like",
     }
     monkeypatch.setattr(registry, "ORACLES", fake)
-    got = set(dim_touching_oracled())
+    got = set(oracled_touching(dirty_tables("dims")))
     assert got == {"hit_comma", "hit_paren", "hit_eos", "hit_upper"}
+
+    # a battery selects on every table it dirties, and only those
+    fake = {
+        "alias": "SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM lineitem",
+        "join": "SELECT 1 FROM orders JOIN customer ON o_custkey = c_custkey",
+        "dim": "SELECT 1 FROM supplier",
+    }
+    monkeypatch.setattr(registry, "ORACLES", fake)
+    assert oracled_touching(dirty_tables("orders")) == ["join"]
+    assert oracled_touching(dirty_tables("lineitem")) == ["alias"]
+    assert oracled_touching(dirty_tables("dims")) == ["dim", "join"]
 
 
 # ---------------------------------------------------------------------------
@@ -169,8 +208,6 @@ def test_bench_calibration_requires_full_suite():
     ]
     out = bench.calibration(full, 0.1, 10.0, samples, groups)
     assert "calibration_factor" in out and "value_normalized" in out
-    # r11: with interleaved samples the endpoint factor rides along
-    assert "calibration_factor_legacy" in out
     # no samples (sampling disabled) → legacy fallback still emits
     out2 = bench.calibration(full, 0.1, 10.0, [], {})
     assert "calibration_factor" in out2 and "value_normalized" in out2

@@ -1,6 +1,6 @@
 """Unit pins for bench.py's calibration schema (ADVICE r11 / VERDICT
-r11 item 1): versioned output, continuity fields against the frozen
-old bases, and the burst flag. Pure-python — no SparkSession."""
+r11 item 1): versioned output, the band, and the burst flag.
+Pure-python — no SparkSession."""
 
 from __future__ import annotations
 
@@ -33,15 +33,9 @@ def test_schema_version_and_all_three_normalizations_emitted():
     assert out["calibration_schema"] == 2
     for key in (
         "value_normalized",
-        "value_normalized_legacy",
         "calibration_factor",
-        "calibration_factor_legacy",
     ):
         assert key in out, key
-    # old bases are FROZEN: the continuity fields exist and are
-    # computed against OLD_CALIBRATION_PINS_BY_SF, never mutated
-    assert "value_normalized_oldbase" in out
-    assert bench.OLD_CALIBRATION_PINS_BY_SF[0.1]["q01_pricing_summary"] == 0.473
 
 
 def test_band_emitted_and_self_describing():
@@ -128,8 +122,6 @@ def test_split_record_moves_bulk_and_loses_nothing():
     # the growing-with-samples field is off the final line
     assert "calibration_pin_raw" in detail
     assert "calibration_pin_raw" not in headline
-    # continuity fields ride the detail line, not the headline
-    assert "value_normalized_oldbase" in detail
     # union reconstructs the full record
     merged = {**headline, **detail}
     assert merged == out

@@ -2,9 +2,10 @@
 tools/check_oracle.py (Spark vs DuckDB at sf0.01) — these tests keep
 the driver-contract shape healthy and fast at sf0.001."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_entry_contract(spark):

@@ -14,10 +14,11 @@ Exit code 1 on any divergence beyond tolerance.
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -6,7 +6,7 @@ since r5 (sf0.1) / r9 (sf5) decoupled the PIN queries' speed from the
 SUITE's, so dividing by a pin-derived factor now penalizes genuine
 improvement. Fix = re-derive the pin bases from a fresh multi-run
 quiet-box campaign under the final (interleaved, schema-2) mechanism,
-and publish a new normalized band alongside the old→new mapping.
+and publish a new normalized band.
 
 Usage:
     # run N solo bench runs, appending one JSON line each to OUT
@@ -124,7 +124,6 @@ def aggregate(out_path: str) -> int:
         "runs": len(rows),
         "burst_clean": len(clean),
         "proposed_bases": proposed,
-        "old_bases": bench.OLD_CALIBRATION_PINS_BY_SF[sf],
         "raw_totals": raw,
         "normalized_under_proposed": norm,
         "proposed_band": [
