@@ -10,8 +10,11 @@ Query path (reference graph: langgraph_pipeline.py:652-751):
 
 Ingestion path (reference graph:
 ingestion_pipeline_langgraph.py:1189-1228): per input file:
-format-dispatch read → clean columns → zstd parquet → catalog entry
-(schema + row count + sample); file conversions run on a small
+format-dispatch read → clean columns → zstd parquet → catalog entry.
+The catalog profile (row count, per-column null and approx-distinct
+counts, approx-distinct rows) is observed during the parquet write,
+so each table is scanned once; the catalog entry then reads only the
+written schema and a 5-row sample. File conversions run on a small
 driver thread pool like the reference's ThreadPool(4) — each Spark
 job is itself cluster-parallel, the pool just overlaps job
 scheduling.
@@ -24,7 +27,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from parquet_pipeline_spark.context import (
     sample_head,
@@ -258,23 +261,14 @@ def run_query_pipeline(
     return res
 
 
-def enrich_catalog_entry(df: DataFrame, name: str, client=None) -> dict:
-    """Rich catalog metadata in the reference's output shape
-    (ingestion_pipeline_langgraph.py:580-592): per-column
-    description/nullable/is_primary_key, table primary/foreign keys,
-    quality score, tags/language/topics/summary.
-
-    Every slot is filled DETERMINISTICALLY from one profiling
-    aggregate over the data (null counts, approx-distinct per column
-    and per row — a single scan, no per-column jobs); an ``LLMClient``
-    upgrades the free-text slots (descriptions, tags, topics,
-    summary) when configured, reference prompt contract
-    (ingestion_pipeline_langgraph.py:428-526). LLM failure falls back
-    to the deterministic values — error-as-degradation, never raise."""
+def profile_aggs(cols: list[str]) -> list:
+    """The catalog profile as aggregate expressions over a table with
+    columns ``cols``: ``_n`` rows, ``_nulls_i``/``_dist_i`` null and
+    approx-distinct counts of column i, ``_drows`` approx-distinct
+    whole rows. Ingestion observes them during the parquet write
+    (``DataFrame.observe``), so no extra scan computes them."""
     from pyspark.sql import functions as F
 
-    cols = df.columns
-    dtypes = dict(df.dtypes)
     aggs = [F.count(F.lit(1)).alias("_n")]
     for i, c in enumerate(cols):
         aggs.append(
@@ -284,16 +278,40 @@ def enrich_catalog_entry(df: DataFrame, name: str, client=None) -> dict:
     aggs.append(
         F.approx_count_distinct(F.struct(*[F.col(c) for c in cols])).alias("_drows")
     )
-    prof = df.agg(*aggs).first()
-    n = prof["_n"] or 0
+    return aggs
+
+
+def enrich_catalog_entry(
+    dtypes: dict[str, str],
+    name: str,
+    profile: dict,
+    sample: list[dict],
+    client=None,
+) -> dict:
+    """Rich catalog metadata in the reference's output shape
+    (ingestion_pipeline_langgraph.py:580-592): per-column
+    description/nullable/is_primary_key, table primary/foreign keys,
+    quality score, tags/language/topics/summary.
+
+    Every slot is filled DETERMINISTICALLY from the table's schema
+    (``dtypes``, column → type in column order) and its ``profile``
+    — the values of ``profile_aggs``, observed while the table was
+    written — so building the entry scans no data. An ``LLMClient`` upgrades the free-text slots
+    (descriptions, tags, topics, summary) when configured, reference
+    prompt contract (ingestion_pipeline_langgraph.py:428-526); its
+    prompt shows the ``sample`` rows the catalog entry already holds.
+    LLM failure falls back to the deterministic values —
+    error-as-degradation, never raise."""
+    cols = list(dtypes)
+    n = profile["_n"] or 0
 
     column_metadata: dict[str, dict] = {}
     pk = None
     fks: list[str] = []
     total_nulls = 0
     for i, c in enumerate(cols):
-        nulls = prof[f"_nulls_{i}"] or 0
-        dist = prof[f"_dist_{i}"] or 0
+        nulls = profile[f"_nulls_{i}"] or 0
+        dist = profile[f"_dist_{i}"] or 0
         total_nulls += nulls
         # approx_count_distinct has ~2% default error — 0.95 margin
         unique = n > 0 and nulls == 0 and dist >= 0.95 * n
@@ -311,7 +329,7 @@ def enrich_catalog_entry(df: DataFrame, name: str, client=None) -> dict:
         column_metadata[pk]["is_primary_key"] = True
     cells = n * len(cols)
     null_pct = round(100.0 * total_nulls / cells, 2) if cells else 0.0
-    has_dups = bool(n > 0 and (prof["_drows"] or 0) < 0.95 * n)
+    has_dups = bool(n > 0 and (profile["_drows"] or 0) < 0.95 * n)
     tags = sorted(
         {
             "time-series" if any("timestamp" in t or t == "date" for t in dtypes.values()) else "tabular",
@@ -335,7 +353,9 @@ def enrich_catalog_entry(df: DataFrame, name: str, client=None) -> dict:
 
     if client is not None:
         try:
-            sample = df.limit(5).toPandas().to_string(index=False)[:2000]
+            import pandas as pd
+
+            rows = pd.DataFrame(sample, columns=cols).to_string(index=False)[:2000]
             col_info = "\n".join(f"- {c}: {dtypes[c]}" for c in cols)
             raw = client.complete(
                 "You annotate dataset catalogs. Respond with JSON only.",
@@ -345,7 +365,7 @@ def enrich_catalog_entry(df: DataFrame, name: str, client=None) -> dict:
                 "data_quality_score, has_duplicates, null_percentage}), "
                 "'tags' (3-7 lowercase strings), 'language' (ISO 639-1), "
                 "'main_topics' (2-4 keywords), 'summary' (one sentence).\n"
-                f"Table: {name}\nColumns:\n{col_info}\nSample rows:\n{sample}",
+                f"Table: {name}\nColumns:\n{col_info}\nSample rows:\n{rows}",
                 json_mode=True,
             )
             llm = json.loads(raw)
@@ -421,13 +441,20 @@ def run_ingestion_pipeline(
     via ``enrich_catalog_entry`` — deterministic profiling, LLM
     overlay when a client is configured).
 
+    One pass per table: the write observes ``profile_aggs`` (row
+    count, null and approx-distinct counts), and the catalog entry is
+    built from that profile, the written schema and one 5-row sample
+    — the written data is never scanned again.
+
     Resumable: a per-file completion manifest (``_ingest_manifest
     .json`` in ``output_dir``, updated as each conversion lands)
-    records input signature → produced tables, so a crashed or
-    re-run ingest skips inputs already converted whose mtime+size
-    are unchanged — the durable-checkpoint role the reference's
-    MemorySaver plays (ingestion_pipeline_langgraph.py:1222-1223),
-    without a process-lifetime-bound store."""
+    records input signature → produced tables and their observed
+    profiles, so a crashed or re-run ingest skips inputs already
+    converted whose signature is unchanged — the durable-checkpoint
+    role the reference's MemorySaver plays
+    (ingestion_pipeline_langgraph.py:1222-1223), without a
+    process-lifetime-bound store. An entry without a profile for
+    every table is stale and its input is reconverted."""
     import threading
 
     os.makedirs(output_dir, exist_ok=True)
@@ -444,39 +471,45 @@ def run_ingestion_pipeline(
             manifest = {}
     m_lock = threading.Lock()
 
-    produced: list[tuple[str, str]] = []
+    # (table name, parquet dir, observed profile) per produced table
+    produced: list[tuple[str, str, dict]] = []
     skipped: list[str] = []
     to_convert: list[str] = []
     for path in input_paths:
-        entry = manifest.get(path)
+        entry = manifest.get(path) or {}
         sig = _input_sig(path)
+        tables = entry.get("tables", [])
+        profiles = entry.get("profiles") or {}
         if (
             entry
             and sig is not None
             and entry.get("sig") == sig
-            and all(os.path.exists(d) for _, d in entry.get("tables", []))
+            and all(os.path.exists(d) and n in profiles for n, d in tables)
         ):
-            produced.extend((n, d) for n, d in entry["tables"])
+            produced.extend((n, d, profiles[n]) for n, d in tables)
             skipped.append(path)
         else:
             to_convert.append(path)
 
-    def convert(path: str) -> list[tuple[str, str]]:
+    def convert(path: str) -> list[tuple[str, str, dict]]:
         sig = _input_sig(path)
         tables = read_any(spark, path)
         out = []
+        profiles = {}
         for name, df in tables.items():
             dest = os.path.join(output_dir, f"{name}.parquet")
-            write_parquet(df, dest)
+            obs = Observation()
+            write_parquet(df.observe(obs, *profile_aggs(df.columns)), dest)
             out.append((name, dest))
+            profiles[name] = obs.get
         # checkpoint this input as done the moment its outputs land
         with m_lock:
-            manifest[path] = {"sig": sig, "tables": out}
+            manifest[path] = {"sig": sig, "tables": out, "profiles": profiles}
             tmp = manifest_path + ".tmp"
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh, indent=1)
             os.replace(tmp, manifest_path)
-        return out
+        return [(n, d, profiles[n]) for n, d in out]
 
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
         futures = {pool.submit(convert, p): p for p in to_convert}
@@ -486,20 +519,23 @@ def run_ingestion_pipeline(
             except Exception as e:  # error-as-data at the file level
                 errors.append({"input": path, "error": str(e)})
 
-    for name, dest in produced:
+    # serial, in ``produced`` order, so LLM calls keep a fixed order
+    for name, dest, profile in produced:
         df = spark.read.parquet(dest)
+        dtypes = dict(df.dtypes)
+        sample = json.loads(
+            json.dumps(
+                [r.asDict(recursive=True) for r in df.limit(5).collect()],
+                default=str,
+            )
+        )
         catalog[name] = {
             "parquet_path": dest,
             "columns": df.columns,
-            "dtypes": dict(df.dtypes),
-            "row_count": df.count(),
-            "sample": json.loads(
-                json.dumps(
-                    [r.asDict(recursive=True) for r in df.limit(5).collect()],
-                    default=str,
-                )
-            ),
-            **enrich_catalog_entry(df, name, client=client),
+            "dtypes": dtypes,
+            "row_count": profile["_n"],
+            "sample": sample,
+            **enrich_catalog_entry(dtypes, name, profile, sample, client=client),
         }
 
     return {

@@ -26,12 +26,36 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "parquet_pipeline_spark"
 
 
+# the driver-memory fallback: half the machine's RAM, at most this
+_MAX_DRIVER_MEM_MB = 16 * 1024
+
+
 def _default_parallelism() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return cpus
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity API on this platform
+        return str(os.cpu_count() or 1)
 
 
-def _default_driver_mem() -> str:
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else about half of MemTotal, capped
+    at 16g (16g when MemTotal cannot be read)."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # kB
+                    return f"{min(total_mb // 2, _MAX_DRIVER_MEM_MB)}m"
+    except OSError:
+        pass
+    return f"{_MAX_DRIVER_MEM_MB}m"
 
 
 def get_spark(

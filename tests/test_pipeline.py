@@ -1,3 +1,5 @@
+import json
+
 from parquet_pipeline_spark.pipeline import run_ingestion_pipeline
 
 
@@ -45,6 +47,20 @@ def test_ingestion_pipeline_resume_skips_converted(spark, tmp_path):
     assert r2["status"] == "completed"
     assert set(r2["tables"]) == {"a", "b"}  # catalog still complete
     assert os.path.getmtime(os.path.join(out_dir, "a.parquet")) == mtime_before
+    # a skipped input's entry is rebuilt from its stored profile
+    assert r2["tables"] == r1["tables"]
+
+    # a manifest entry without a stored profile (one written before
+    # profiles were stored) is stale: that input reconverts
+    manifest_path = os.path.join(out_dir, "_ingest_manifest.json")
+    with open(manifest_path) as fh:
+        manifest = json.load(fh)
+    del manifest[str(jl)]["profiles"]
+    with open(manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    r2b = run_ingestion_pipeline(spark, [str(csv), str(jl)], out_dir)
+    assert r2b["skipped_inputs"] == [str(csv)]
+    assert r2b["tables"] == r1["tables"]
 
     # modify one input → only that one reconverts
     os.utime(csv, None)
@@ -113,6 +129,114 @@ def test_ingestion_pipeline_partial_on_bad_input(spark, tmp_path):
     assert result["status"] == "partial"
     assert list(result["tables"]) == ["ok"]
     assert result["errors"] and "missing.csv" in result["errors"][0]["input"]
+
+
+def _scanned_profile(spark, dest: str) -> dict:
+    """The catalog's profile fields, recomputed by an explicit
+    aggregate over the written parquet."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(dest)
+    cols = df.columns
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(F.col(c).isNull().cast("int")).alias(f"nulls_{c}") for c in cols],
+        *[F.approx_count_distinct(c).alias(f"dist_{c}") for c in cols],
+        F.approx_count_distinct(F.struct(*cols)).alias("drows"),
+    ).first()
+    n = row["n"]
+    nulls = {c: row[f"nulls_{c}"] or 0 for c in cols}
+    pk, fks = None, []
+    for c in cols:
+        unique = n > 0 and nulls[c] == 0 and row[f"dist_{c}"] >= 0.95 * n
+        keyish = c.lower().endswith(("id", "key"))
+        if keyish and unique and pk is None:
+            pk = c
+        elif keyish and not unique:
+            fks.append(c)
+    cells = n * len(cols)
+    return {
+        "row_count": n,
+        "nullable": {c: nulls[c] > 0 for c in cols},
+        "primary_key": pk,
+        "foreign_keys": fks,
+        "has_duplicates": n > 0 and row["drows"] < 0.95 * n,
+        "null_percentage": (
+            round(100.0 * sum(nulls.values()) / cells, 2) if cells else 0.0
+        ),
+    }
+
+
+def test_observed_profile_matches_a_scan(spark, tmp_path):
+    """The profile observed during the write gives the same catalog
+    fields as an aggregate over the written parquet — with NULLs, a
+    duplicated row, key-like columns and a header-only input (an
+    observation over zero rows)."""
+    orders = tmp_path / "orders.csv"
+    orders.write_text(
+        "order_id,cust_id,amount,note\n"
+        "1,10,5.5,a\n2,10,,b\n3,11,7.0,\n4,12,,c\n4,12,,c\n"
+    )
+    customers = tmp_path / "customers.csv"
+    customers.write_text("cust_id,name\n10,ann\n11,\n12,cy\n")
+    empty = tmp_path / "empty.csv"
+    empty.write_text("row_id,label\n")
+    result = run_ingestion_pipeline(
+        spark, [str(orders), str(customers), str(empty)], str(tmp_path / "lake")
+    )
+    assert result["status"] == "completed"
+
+    for name, entry in result["tables"].items():
+        want = _scanned_profile(spark, entry["parquet_path"])
+        tm = entry["table_metadata"]
+        got = {
+            "row_count": entry["row_count"],
+            "nullable": {
+                c: m["nullable"] for c, m in entry["column_metadata"].items()
+            },
+            "primary_key": tm["primary_key"],
+            "foreign_keys": tm["foreign_keys"],
+            "has_duplicates": tm["has_duplicates"],
+            "null_percentage": tm["null_percentage"],
+        }
+        assert got == want, name
+
+    t = result["tables"]
+    assert t["orders"]["row_count"] == 5
+    assert t["orders"]["table_metadata"]["has_duplicates"] is True
+    assert t["orders"]["table_metadata"]["foreign_keys"] == ["order_id", "cust_id"]
+    assert t["customers"]["table_metadata"]["primary_key"] == "cust_id"
+    assert t["customers"]["column_metadata"]["name"]["nullable"] is True
+    assert t["empty"]["row_count"] == 0
+    assert t["empty"]["sample"] == []
+
+
+def test_ingest_reads_back_only_the_sample(spark, tmp_path):
+    """After the write, the catalog build reads each table's parquet
+    twice — its schema and the 5-row sample, one Spark job each — with
+    no count and no profiling scan, and an LLM client's prompt reuses
+    the sample. A resumed ingest writes nothing, so its jobs are
+    exactly those."""
+    from parquet_pipeline_spark.plans import FakeClient
+
+    a = tmp_path / "a.csv"
+    a.write_text("k,v\n1,x\n2,y\n")
+    b = tmp_path / "b.jsonl"
+    b.write_text('{"k": 1}\n{"k": 2}\n')
+    out_dir = str(tmp_path / "lake")
+    run_ingestion_pipeline(spark, [str(a), str(b)], out_dir)
+
+    sc = spark.sparkContext
+    group = f"ingest-readback-{id(tmp_path)}"
+    sc.setJobGroup(group, "resumed ingest")
+    try:
+        r = run_ingestion_pipeline(
+            spark, [str(a), str(b)], out_dir, client=FakeClient([{}, {}])
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r["skipped_inputs"]) == sorted([str(a), str(b)])
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 * 2
 
 
 def test_catalog_register_and_describe(spark, sf_dir):
@@ -279,6 +403,14 @@ def test_rich_catalog_llm_overlay(spark, tmp_path):
     assert entry["llm_tags"] == ["demo", "tiny"]
     assert entry["language"] == "fr"
     assert entry["summary"] == "Two demo rows."
+
+    # one call, whose prompt renders the rows the entry's sample holds
+    import pandas as pd
+
+    assert len(client.calls) == 1
+    prompt = client.calls[0][1]
+    assert len(entry["sample"]) == 2
+    assert pd.DataFrame(entry["sample"]).to_string(index=False) in prompt
 
 
 def test_engine_curate_matches_t20_query(spark):

@@ -59,6 +59,30 @@ def test_cloud_storage_conf_azure_and_s3(monkeypatch):
     )
 
 
+def test_session_defaults_fit_the_machine(monkeypatch, tmp_path):
+    """Without the overrides, local[N] is the CPUs this process may run
+    on and driver memory is half of MemTotal, capped at 16g; the
+    overrides keep precedence. Spark-free."""
+    from parquet_pipeline_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert session._default_parallelism() == "3"
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree:  1 kB\n")
+    assert session._default_driver_mem(str(meminfo)) == "8046m"
+    meminfo.write_text("MemTotal:       134217728 kB\n")  # 128 GiB
+    assert session._default_driver_mem(str(meminfo)) == "16384m"
+    assert session._default_driver_mem(str(tmp_path / "absent")) == "16384m"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._default_parallelism() == "7"
+    assert session._default_driver_mem(str(meminfo)) == "3g"
+
+
 def test_apply_cloud_conf_reaches_live_hadoop_conf(spark):
     n = apply_cloud_conf(
         spark, {"spark.hadoop.fs.s3a.endpoint": "http://example:9000"}
