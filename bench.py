@@ -181,7 +181,6 @@ def _sample_factor(times: dict[str, float], pins: dict[str, float]) -> float:
 def calibration(
     timings: dict,
     sf: float,
-    total: float,
     samples: list[dict],
     groups: dict[str, int],
 ) -> dict:
@@ -192,7 +191,8 @@ def calibration(
     incomparable numbers (cold codegen, different cache pressure), so
     the timed set must cover the whole default HEADLINE composition
     at a pinned sf before calibration_factor/value_normalized are
-    emitted.
+    emitted, and at least two interleaved pin samples must bracket
+    its query groups.
 
     Normalization is LOCAL (VERDICT r10 item 1): the pin set runs
     interleaved with the suite, so each query group is bracketed by
@@ -209,7 +209,7 @@ def calibration(
     pins = CALIBRATION_PINS_BY_SF.get(sf)
     if pins is None or not set(HEADLINE) <= set(timings):
         return {}
-    if not all(n in timings for n in pins):
+    if not all(n in timings for n in pins) or len(samples) < 2 or not groups:
         return {}
     out = {
         # raw per-pin sample times (r12): lets a recalibration
@@ -229,48 +229,38 @@ def calibration(
         # mapping lives in BENCH_NOTES §Recalibration.
         "calibration_schema": 2,
     }
-    if len(samples) >= 2 and groups:
-        facs = [_sample_factor(s, pins) for s in samples]
+    facs = [_sample_factor(s, pins) for s in samples]
 
-        # group g is bracketed by samples[g] (taken just before it)
-        # and samples[g+1]; a missing tail sample falls back to the
-        # last one available
-        def local(g: int) -> float:
-            lo = facs[min(g, len(facs) - 1)]
-            hi = facs[min(g + 1, len(facs) - 1)]
-            return (lo * hi) ** 0.5
+    # group g is bracketed by samples[g] (taken just before it)
+    # and samples[g+1]; a missing tail sample falls back to the
+    # last one available
+    def local(g: int) -> float:
+        lo = facs[min(g, len(facs) - 1)]
+        hi = facs[min(g + 1, len(facs) - 1)]
+        return (lo * hi) ** 0.5
 
-        norm_total = sum(t / local(groups[n]) for n, t in timings.items())
-        out.update(
-            {
-                "calibration_factor": round(statistics.median(facs), 3),
-                "value_normalized": round(norm_total, 3),
-                "calibration_samples": [round(s, 3) for s in facs],
-            }
-        )
-        band = NORMALIZED_BAND_BY_SF.get(sf)
-        if band:
-            out["calibration_band"] = list(band)
-        out.update(
-            {
-                "calibration_groups": max(groups.values()) + 1,
-                # a sub-minute burst between two samples is
-                # UNRECOVERABLE at this sampling granularity (no
-                # mechanism can know which of a query's 3 repeats it
-                # hit) — but it IS detectable. Flagged runs should be
-                # discounted and re-run rather than trusted.
-                "calibration_burst_detected": max(facs) / min(facs) > 1.5,
-            }
-        )
-    else:  # pins apply but sampling was disabled — fall back
-        fallback = sorted(timings[n] / pin for n, pin in pins.items())
-        fb = fallback[len(fallback) // 2]
-        out.update(
-            {
-                "calibration_factor": round(fb, 3),
-                "value_normalized": round(total / fb, 3),
-            }
-        )
+    norm_total = sum(t / local(groups[n]) for n, t in timings.items())
+    out.update(
+        {
+            "calibration_factor": round(statistics.median(facs), 3),
+            "value_normalized": round(norm_total, 3),
+            "calibration_samples": [round(s, 3) for s in facs],
+        }
+    )
+    band = NORMALIZED_BAND_BY_SF.get(sf)
+    if band:
+        out["calibration_band"] = list(band)
+    out.update(
+        {
+            "calibration_groups": max(groups.values()) + 1,
+            # a sub-minute burst between two samples is
+            # UNRECOVERABLE at this sampling granularity (no
+            # mechanism can know which of a query's 3 repeats it
+            # hit) — but it IS detectable. Flagged runs should be
+            # discounted and re-run rather than trusted.
+            "calibration_burst_detected": max(facs) / min(facs) > 1.5,
+        }
+    )
     return out
 
 
@@ -359,9 +349,7 @@ def main() -> None:
     # one the pins are valid for — same guard calibration() applies)
     pins = CALIBRATION_PINS_BY_SF.get(sf)
     sample_pins = pins if (pins and set(HEADLINE) <= set(names)) else None
-    pin_every = max(
-        1, int(os.environ.get("BENCH_PIN_EVERY", PIN_SAMPLE_EVERY_BY_SF.get(sf, 5)))
-    )
+    pin_every = PIN_SAMPLE_EVERY_BY_SF.get(sf, 5)
     pin_samples: list[dict] = []
     groups: dict[str, int] = {}  # query name -> sample-bracketed group
     if sample_pins:
@@ -447,7 +435,7 @@ def main() -> None:
         "e2e_engine_ask_multi_ok": multi_ok,
         "sf": sf,
     }
-    out.update(calibration(timings, sf, total, pin_samples, groups))
+    out.update(calibration(timings, sf, pin_samples, groups))
     headline, detail = split_record(out)
     # the FULL record (headline ∪ detail) survives in the side file
     # regardless of what the stdout tail captures

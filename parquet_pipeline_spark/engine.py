@@ -6,7 +6,11 @@ ingestion_pipeline_langgraph.py:1231-1306;
 langgraph_pipeline.py:755-851). ``Engine`` exposes the same two
 verbs on Spark with the same defaults — keyless deterministic
 planning out of the box, an ``LLMClient`` plugged in when available,
-and an optional semantic layer built from any text column.
+and an optional semantic layer built from any text column. The
+semantic index is embedded once, when ``build_semantic_index`` runs,
+and held in Spark's cache for the Engine's life, so ``ask`` and
+``search`` only embed the question; re-indexing a table replaces its
+cached frames and releases the old ones, and ``close`` releases all.
 
     >>> eng = Engine.local()
     >>> eng.ingest(["data/loans.xlsx", "data/events.jsonl"])
@@ -19,6 +23,7 @@ and an optional semantic layer built from any text column.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,6 +49,9 @@ class Engine:
         self.warehouse_dir = warehouse_dir
         self.client = client
         self.catalog = Catalog(spark)
+        # table -> its persisted (documents, embeddings) pair;
+        # _documents/_embeddings are the unions over these pairs
+        self._index: dict[str, tuple[DataFrame, DataFrame]] = {}
         self._embeddings: DataFrame | None = None
         self._documents: DataFrame | None = None
         # ask()-path views cache (r16): key = catalog (name, path)
@@ -86,11 +94,17 @@ class Engine:
         ``$EMBEDDINGS_BASE_URL`` is set — dim-checked); pass an
         explicit embedder to pin the behavior regardless of env.
 
-        Row ids default to ``xxhash64(text)`` — a pure function of
-        the row, so the embeddings job and the documents job derive
-        the SAME id independently (monotonically_increasing_id is
-        partition-layout-dependent and could diverge between the two
-        jobs). Ids are only unique per table; retrieval joins on
+        The index is built here, not per question: the table's
+        (vec_id, text, source_table) rows are deduplicated on
+        (source_table, vec_id) and persisted, then embedded from that
+        cached frame and persisted again, each with one action. Both
+        frames stay cached until ``close``, so every ``ask`` and
+        ``search`` reads stored vectors; the text and the vector of one
+        vec_id come from the same deduplicated row. Indexing a table
+        again unpersists its previous pair and replaces it.
+
+        Row ids default to ``xxhash64(text)``, a pure function of the
+        row. Ids are only unique per table; retrieval joins on
         (source_table, vec_id)."""
         from pyspark.sql import functions as F
 
@@ -98,24 +112,48 @@ class Engine:
         if id_col is None:
             df = df.withColumn("_row_id", F.xxhash64(F.col(text_col)))
             id_col = "_row_id"
-        emb = embed_text(df, text_col, id_col, embedder=embedder, dim=dim)
+        # release the old pair first: a rebuilt frame with the same plan
+        # would otherwise reuse its cache entry and be dropped with it
+        for old in self._index.pop(table, ()):
+            old.unpersist()
+        held: list[DataFrame] = []
+        try:
+            docs = (
+                df.select(F.col(id_col).alias("vec_id"), F.col(text_col).alias("text"))
+                .withColumn("source_table", F.lit(table))
+                .dropDuplicates(["source_table", "vec_id"])
+                .persist()
+            )
+            held.append(docs)
+            docs.count()
+            emb = (
+                embed_text(docs, "text", "vec_id", embedder=embedder, dim=dim)
+                .withColumn("source_table", F.lit(table))
+                .persist()
+            )
+            held.append(emb)
+            emb.count()
+            self._index[table] = (docs, emb)
+        except BaseException:
+            for frame in held:
+                frame.unpersist()
+            raise
+        finally:
+            pairs = list(self._index.values())
+            self._documents = (
+                reduce(DataFrame.unionByName, [d for d, _ in pairs]) if pairs else None
+            )
+            self._embeddings = (
+                reduce(DataFrame.unionByName, [e for _, e in pairs]) if pairs else None
+            )
 
-        docs = (
-            df.select(F.col(id_col).alias("vec_id"), F.col(text_col).alias("text"))
-            .withColumn("source_table", F.lit(table))
-            .dropDuplicates(["source_table", "vec_id"])
-        )
-        emb = (
-            emb.withColumnRenamed(id_col, "vec_id")
-            .withColumn("source_table", F.lit(table))
-            .dropDuplicates(["source_table", "vec_id"])
-        )
-        self._embeddings = (
-            emb if self._embeddings is None else self._embeddings.unionByName(emb)
-        )
-        self._documents = (
-            docs if self._documents is None else self._documents.unionByName(docs)
-        )
+    def close(self) -> None:
+        """Release the cached semantic index of every table."""
+        for pair in self._index.values():
+            for frame in pair:
+                frame.unpersist()
+        self._index.clear()
+        self._documents = self._embeddings = None
 
     # -- query (reference: run_rag_pipeline) ---------------------------
     def ask(self, question: str) -> QueryResult:

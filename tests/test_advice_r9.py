@@ -206,14 +206,14 @@ def test_bench_calibration_requires_full_suite():
         {n: v * s for n, v in bench.CALIBRATION_PINS.items()}
         for s in (1.0, 1.1, 0.9, 1.0, 1.0, 1.05)
     ]
-    out = bench.calibration(full, 0.1, 10.0, samples, groups)
+    out = bench.calibration(full, 0.1, samples, groups)
     assert "calibration_factor" in out and "value_normalized" in out
-    # no samples (sampling disabled) → legacy fallback still emits
-    out2 = bench.calibration(full, 0.1, 10.0, [], {})
-    assert "calibration_factor" in out2 and "value_normalized" in out2
+    # fewer than 2 samples → no local normalization, nothing emitted
+    out2 = bench.calibration(full, 0.1, [], {})
+    assert out2 == {}
 
     # subset that still contains all five pins → NOT comparable
     subset = {n: 1.0 for n in bench.CALIBRATION_PINS}
-    assert bench.calibration(subset, 0.1, 5.0, samples, groups) == {}
+    assert bench.calibration(subset, 0.1, samples, groups) == {}
     # wrong sf → not comparable either
-    assert bench.calibration(full, 0.01, 10.0, samples, groups) == {}
+    assert bench.calibration(full, 0.01, samples, groups) == {}

@@ -29,7 +29,7 @@ def _fake_run(pin_scale=1.0):
 
 def test_schema_version_and_all_three_normalizations_emitted():
     timings, samples, groups = _fake_run()
-    out = bench.calibration(timings, 0.1, sum(timings.values()), samples, groups)
+    out = bench.calibration(timings, 0.1, samples, groups)
     assert out["calibration_schema"] == 2
     for key in (
         "value_normalized",
@@ -40,7 +40,7 @@ def test_schema_version_and_all_three_normalizations_emitted():
 
 def test_band_emitted_and_self_describing():
     timings, samples, groups = _fake_run()
-    out = bench.calibration(timings, 0.1, sum(timings.values()), samples, groups)
+    out = bench.calibration(timings, 0.1, samples, groups)
     assert out["calibration_band"] == list(bench.NORMALIZED_BAND_BY_SF[0.1])
     # raw per-pin samples ride along for offline recalibration
     assert len(out["calibration_pin_raw"]) == len(samples)
@@ -50,7 +50,7 @@ def test_band_emitted_and_self_describing():
 def test_factor_scales_normalized_total_inversely():
     timings, samples, groups = _fake_run(pin_scale=2.0)
     total = sum(timings.values())
-    out = bench.calibration(timings, 0.1, total, samples, groups)
+    out = bench.calibration(timings, 0.1, samples, groups)
     # pins ran 2x their base -> box half speed -> normalized halves
     assert abs(out["value_normalized"] - total / 2.0) < 1e-6
     assert out["calibration_burst_detected"] is False
@@ -60,19 +60,19 @@ def test_burst_detection_flags_flapping_samples():
     timings, samples, groups = _fake_run()
     pins = bench.CALIBRATION_PINS_BY_SF[0.1]
     samples[1] = {n: v * 2.0 for n, v in pins.items()}  # mid-run burst
-    out = bench.calibration(timings, 0.1, sum(timings.values()), samples, groups)
+    out = bench.calibration(timings, 0.1, samples, groups)
     assert out["calibration_burst_detected"] is True
 
 
 def test_subset_runs_emit_no_calibration():
     timings = {"q01_pricing_summary": 1.0}
-    out = bench.calibration(timings, 0.1, 1.0, [], {})
+    out = bench.calibration(timings, 0.1, [], {})
     assert out == {}
 
 
 def test_unpinned_sf_emits_no_calibration():
     timings = {n: 1.0 for n in bench.HEADLINE}
-    out = bench.calibration(timings, 0.5, 22.0, [], {})
+    out = bench.calibration(timings, 0.5, [], {})
     assert out == {}
 
 
@@ -100,7 +100,7 @@ def _realistic_full_record():
     }
     # 8 samples: sf0.1 runs 24 queries / pin_every=5 + closing sample
     samples = samples * 3
-    out.update(bench.calibration(timings, 0.1, 9999.999, samples, groups))
+    out.update(bench.calibration(timings, 0.1, samples, groups))
     return out
 
 

@@ -324,6 +324,127 @@ def test_engine_semantic_index(spark, tmp_path):
     assert res.intents[res.sub_queries[0]] == "SEMANTIC_SEARCH"
 
 
+def _docs_engine(spark, tmp_path):
+    """An Engine over a two-row ``docs`` table (doc_id, text)."""
+    from parquet_pipeline_spark.engine import Engine
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(0, "gregory red loan applicant file"), (1, "warehouse shipping schedule")],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    eng = Engine(spark, warehouse_dir=str(tmp_path / "lake"))
+    eng.catalog.register_path(path, "docs")
+    return eng
+
+
+def _top_node(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    return plan.nodeName()
+
+
+def test_engine_semantic_index_is_cached(spark, tmp_path):
+    """build_semantic_index embeds once: both frames are in the cache
+    manager and loaded when it returns, and the index reads them
+    through InMemoryTableScan instead of re-running the embedder."""
+    eng = _docs_engine(spark, tmp_path)
+    eng.build_semantic_index("docs", "text", id_col="doc_id")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for frame in (eng._documents, eng._embeddings):
+        cached = cache.lookupCachedData(frame._jdf)
+        assert cached.isDefined()
+        relation = cached.get().cachedRepresentation()
+        assert relation.cacheBuilder().isCachedColumnBuffersLoaded()
+        assert _top_node(frame) == "InMemoryTableScan"
+    eng.close()
+
+
+def test_engine_reindex_replaces_table(spark, tmp_path):
+    """Indexing a table twice replaces its pair: no doubled rows or
+    hits, and the first pair's cached RDDs are released; close()
+    releases the rest."""
+    from parquet_pipeline_spark.pipeline import semantic_search
+
+    eng = _docs_engine(spark, tmp_path)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    eng.build_semantic_index("docs", "text", id_col="doc_id")
+    after_first = persistent().size()
+    eng.build_semantic_index("docs", "text", id_col="doc_id")
+    assert persistent().size() == after_first
+    assert eng._embeddings.count() == 2
+    assert eng._documents.count() == 2
+    _tables, context, hits = semantic_search(
+        "warehouse shipping", eng._embeddings, eng._documents, threshold=0.0
+    )
+    assert hits.count() == 2
+    assert context.count("[Source: docs]") == 2
+    eng.close()
+    assert persistent().size() == before
+    assert eng._documents is None and eng._embeddings is None
+
+
+def test_engine_semantic_index_failure_releases(spark, tmp_path):
+    """An embedder that raises leaves no cached frame and no index."""
+    import pytest as _pytest
+
+    def broken(texts):
+        raise RuntimeError("embedder down")
+
+    eng = _docs_engine(spark, tmp_path)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with _pytest.raises(Exception, match="embedder down"):
+        eng.build_semantic_index("docs", "text", id_col="doc_id", embedder=broken)
+    assert persistent().size() == before
+    assert eng._documents is None and eng._embeddings is None
+
+
+def test_engine_semantic_index_matches_lazy_form(spark, tmp_path, sf_dir):
+    """The cached index answers exactly as the lazy form it replaced:
+    embed_text over the table and two independent dropDuplicates."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from parquet_pipeline_spark.engine import Engine
+    from parquet_pipeline_spark.operators.embedding import embed_text
+    from parquet_pipeline_spark.pipeline import semantic_search
+
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.1", "documents.parquet")
+    eng = Engine(spark, warehouse_dir=str(tmp_path / "lake"))
+    eng.catalog.register_path(path, "documents")
+    eng.build_semantic_index("documents", "text")
+
+    df = eng.catalog.df("documents").withColumn("_row_id", F.xxhash64("text"))
+    keys = ["source_table", "vec_id"]
+    lazy_docs = (
+        df.select(F.col("_row_id").alias("vec_id"), "text")
+        .withColumn("source_table", F.lit("documents"))
+        .dropDuplicates(keys)
+    )
+    lazy_emb = (
+        embed_text(df, "text", "_row_id", dim=64)
+        .withColumnRenamed("_row_id", "vec_id")
+        .withColumn("source_table", F.lit("documents"))
+        .dropDuplicates(keys)
+    )
+    assert eng._embeddings.count() == lazy_emb.count()
+
+    own_text = df.orderBy("doc_id").first()["text"]
+    for q in ("spark window sort", "who ships the warehouse orders", own_text):
+        for threshold in (0.0, 0.5):
+            got = semantic_search(q, eng._embeddings, eng._documents, threshold=threshold)
+            want = semantic_search(q, lazy_emb, lazy_docs, threshold=threshold)
+            assert got[:2] == want[:2], (q, threshold)
+            assert {(r["vec_id"], r["score"]) for r in got[2].collect()} == {
+                (r["vec_id"], r["score"]) for r in want[2].collect()
+            }
+    eng.close()
+
+
 def test_validate_rules(spark):
     from parquet_pipeline_spark.operators.quality import validate
 

@@ -113,9 +113,7 @@ def aggregate(out_path: str) -> int:
             sys.stderr.write("run lacks calibration_pin_raw; skipped\n")
             continue
         groups = _groups(bench, len(r["queries"]), pin_every)
-        out = bench.calibration(
-            r["queries"], sf, r["value"], r["calibration_pin_raw"], groups
-        )
+        out = bench.calibration(r["queries"], sf, r["calibration_pin_raw"], groups)
         norm.append(out["value_normalized"])
         raw.append(r["value"])
 
