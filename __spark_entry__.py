@@ -107,7 +107,7 @@ _CHANGED_LOG = [
     ("a09_ivf_knn_join", 12),
     ("a13_pq_recall_floor", 12),
     ("v07_exact_knn_join", 12),
-    # r13: replay-dedup contract (pq_topk groupBy-max, knn_join
+    # r13: replay-dedup contract (ADC groupBy-max, knn_join
     # shortlist dedup, compact full-row dedup), broadcast LUT in the
     # batched probe, -inf masking fix, a16 cached build, streaming
     # probe chunking — byte-identical on clean data, re-gate every

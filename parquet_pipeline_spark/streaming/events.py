@@ -735,7 +735,7 @@ def streaming_vector_index_append(
     appended to the partitioned on-disk index
     (``vectors.write_ivf_index`` layout) — the vector twin of
     ``streaming_incremental_dedup``'s fingerprint appends. Queries
-    via ``ivf_topk_indexed`` see new vectors as soon as their batch
+    via ``ivf_knn_join`` see new vectors as soon as their batch
     commits; centroids stay fixed until an offline rebuild, so the
     per-batch cost is batch-sized (one broadcast argmax, no corpus
     rescan). Compact with ``compact_partitioned(..., ['cell'])``
@@ -780,9 +780,9 @@ def streaming_ivf_pq_append(
     at-least-once — a trigger replayed after a crash between the
     append and the checkpoint commit duplicates its batch's code
     rows. Duplicate ids waste index bytes and shortlist depth but
-    cannot corrupt probe results: every probe path dedups ids before
-    ranking (``pq_topk`` groupBy-max, ``ivf_pq_knn_join``'s
-    (q_id, id) dropDuplicates before its shortlist window), pinned
+    cannot corrupt probe results: ``ivf_pq_knn_join`` collapses
+    duplicate (q_id, id) pairs (groupBy-max) before its shortlist
+    window, pinned
     by the crash-replay tests in tests/test_vectors.py. The next
     ``ivf_pq_compact`` rewrite reclaims the bytes — it drops exact
     duplicate rows during its shuffle. Compact when
@@ -918,8 +918,8 @@ def streaming_knn_probe(
     Quantization tiers (VERDICT r15 item 2): ``tier='ivf_pq'``
     (default) probes the persisted IVF-ADC index exactly as above.
     ``tier='sq8'`` serves the 4× int8 tier instead: ``index_path``
-    is the persisted SQ8 codes parquet (sq8_encode /
-    sq8_build_cached), ``sq8_bounds`` is its (lo, span) model, and
+    is the persisted SQ8 codes parquet (sq8_encode), ``sq8_bounds``
+    is its (lo, span) model, and
     each trigger chunk runs as ONE ``sq8_knn_join`` plan (Arrow
     matmul scoring + exact refine). sq8_knn_join is per-query masked
     the same way — scores are matmul ROWS, the shortlist window is

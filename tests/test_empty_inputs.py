@@ -76,7 +76,6 @@ def test_vector_ops_on_empty_corpus(spark, sf_dir, empty_emb, tmp_path):
         ivf_assign,
         ivf_centroids,
         ivf_knn_join,
-        ivf_topk,
         kmeans_refine,
         topk,
         write_ivf_index,
@@ -88,7 +87,6 @@ def test_vector_ops_on_empty_corpus(spark, sf_dir, empty_emb, tmp_path):
     cents = ivf_centroids(empty_emb, k=16)
     assert cents == []
     assert ivf_assign(empty_emb, cents).count() == 0
-    assert ivf_topk(empty_emb, cents, qv, k=5).count() == 0
     assert kmeans_refine(empty_emb, cents) == []
     assert topk(empty_emb.select("vec_id", "embedding"), qv, k=5).count() == 0
     assert exact_knn_join(empty_emb, [(0, qv)], k=5).count() == 0
@@ -137,7 +135,7 @@ def test_day_zero_indexes(spark, sf_dir, tmp_path):
     from parquet_pipeline_spark.operators.dedup import banded_minhash
     from parquet_pipeline_spark.operators.vectors import (
         ivf_centroids,
-        ivf_topk_indexed,
+        ivf_knn_join,
         write_ivf_index,
     )
     from parquet_pipeline_spark.streaming.events import (
@@ -152,7 +150,7 @@ def test_day_zero_indexes(spark, sf_dir, tmp_path):
     write_ivf_index(
         emb.filter("vec_id < 0").select("vec_id", "embedding"), cents, ivf_idx
     )
-    assert ivf_topk_indexed(spark, ivf_idx, cents, qv, k=3).count() == 0
+    assert ivf_knn_join(spark, ivf_idx, cents, [(0, qv)], k=3).count() == 0
 
     mh_idx = str(tmp_path / "mh_day0")
     empty_docs = spark.createDataFrame([], "doc_id long, text string")

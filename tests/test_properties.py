@@ -303,15 +303,10 @@ def test_asof_join_null_contract_matches_naive(probe_secs, quotes_raw):
 
 # ---------------------------------------------------------------------------
 # pq_knn_join (r14): batched flat-ADC retrieval over randomized query
-# batches must agree per-query with the solo pq_topk_refined chain.
-# Disagreement is allowed ONLY as a float-associativity tie at the
-# top-k cut: the two refine kernels sum the same float64 products in
-# different orders (matmul vs row-wise sum), so two corpus rows whose
-# exact scores differ below ~1 ulp can legitimately swap at the k-th
-# slot. Any symmetric-difference row must therefore score within 1e-9
-# of the k-th score on both sides — a structural mismatch (masking
-# bug, shortlist bug, LUT mixup across co-batched queries) produces
-# rows far from the boundary and fails.
+# batches must agree per-query with one-row calls. Every stage is
+# per-query (LUT, masked cut, shortlist window, pair-wise refine), so
+# the agreement is exact — a masking bug, shortlist bug or LUT mixup
+# across co-batched queries shows up as a differing row.
 # ---------------------------------------------------------------------------
 _PQ_PROP_CACHE: dict = {}
 
@@ -353,10 +348,7 @@ def _pq_prop_fixture():
     )
 )
 def test_pq_knn_join_property_matches_solo(qvecs):
-    from parquet_pipeline_spark.operators.vectors import (
-        pq_knn_join,
-        pq_topk_refined,
-    )
+    from parquet_pipeline_spark.operators.vectors import pq_knn_join
 
     spark, corpus, books, codes = _pq_prop_fixture()
     k, sl = 5, 12  # shortlist < corpus: the ADC cut is real
@@ -369,8 +361,8 @@ def test_pq_knn_join_property_matches_solo(qvecs):
     for q_id, qv in qrows:
         solo = {
             r["vec_id"]: r["score"]
-            for r in pq_topk_refined(
-                codes, books, corpus, q_id, qv, k=k, shortlist=sl,
+            for r in pq_knn_join(
+                codes, books, corpus, [(q_id, qv)], k=k, shortlist=sl,
                 dedup_ids=False,
             ).collect()
         }
@@ -378,13 +370,4 @@ def test_pq_knn_join_property_matches_solo(qvecs):
         if all(float(x) == 0.0 for x in qv):
             assert got == {} and solo == {}  # zero-norm query drops
             continue
-        if got == solo:
-            continue
-        # boundary-tie fallback: every disagreeing row must sit at
-        # the k-th score on both sides (see block comment)
-        kth = min(solo.values()) if solo else 0.0
-        for vid in set(got) ^ set(solo):
-            s = got.get(vid, solo.get(vid))
-            assert abs(s - kth) < 1e-9, (q_id, vid, s, kth)
-        for vid in set(got) & set(solo):
-            assert abs(got[vid] - solo[vid]) < 1e-9
+        assert got == solo, (q_id, got, solo)

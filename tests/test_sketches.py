@@ -2,10 +2,20 @@ from pyspark.sql import functions as F
 
 from parquet_pipeline_spark.operators.vectors import (
     _query_vector,
+    exact_knn_join,
     ivf_centroids,
-    ivf_topk,
-    topk,
+    ivf_knn_join,
+    write_ivf_index,
 )
+
+
+def _ivf_probe(spark, path, cents, qv, nprobe):
+    """Top-10 (vec_id, score) of a one-row probe through the persisted
+    IVF index at ``path``."""
+    return sorted(
+        tuple(r)[1:]
+        for r in ivf_knn_join(spark, path, cents, [(0, qv)], k=10, nprobe=nprobe).collect()
+    )
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -26,27 +36,26 @@ def test_percentile_approx_close_to_exact(spark, sf_dir):
     assert abs(row["ap"] - row["ex"]) / row["ex"] < 0.01
 
 
-def test_ivf_recall_vs_exact(spark, sf_dir):
+def test_ivf_recall_vs_exact(spark, sf_dir, tmp_path):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") != 0
     )
     qv = _query_vector(spark, sf_dir, vec_id=0)
-    exact = [r["vec_id"] for r in topk(emb, qv, k=10).collect()]
+    exact = sorted(tuple(r)[1:] for r in exact_knn_join(emb, [(0, qv)], k=10).collect())
     cents = ivf_centroids(emb, k=8)
-    approx = [
-        r["vec_id"] for r in ivf_topk(emb, cents, qv, k=10, nprobe=4).collect()
-    ]
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, cents, path)
+    approx = _ivf_probe(spark, path, cents, qv, 4)
     # probing half the cells must recover a meaningful share of the
     # true top-10 (the synthetic vectors are near-orthogonal — a lax
     # bound keeps the test meaningful without being flaky)
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.3, f"IVF recall too low: {recall}"
     # and with all cells probed it must equal exact
-    full = [r["vec_id"] for r in ivf_topk(emb, cents, qv, k=10, nprobe=8).collect()]
-    assert full == exact
+    assert _ivf_probe(spark, path, cents, qv, 8) == exact
 
 
-def test_kmeans_refinement_reduces_inertia_and_preserves_exactness(spark, sf_dir):
+def test_kmeans_refinement_reduces_inertia_and_preserves_exactness(spark, sf_dir, tmp_path):
     from parquet_pipeline_spark.operators.vectors import (
         ivf_centroids,
         kmeans_inertia,
@@ -62,9 +71,10 @@ def test_kmeans_refinement_reduces_inertia_and_preserves_exactness(spark, sf_dir
 
     # full-probe top-k with refined cells still equals exact top-k
     qv = _query_vector(spark, sf_dir, vec_id=0)
-    exact = [r["vec_id"] for r in topk(emb, qv, k=10).collect()]
-    full = [r["vec_id"] for r in ivf_topk(emb, refined, qv, k=10, nprobe=8).collect()]
-    assert full == exact
+    exact = sorted(tuple(r)[1:] for r in exact_knn_join(emb, [(0, qv)], k=10).collect())
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, refined, path)
+    assert _ivf_probe(spark, path, refined, qv, 8) == exact
 
 
 import pytest

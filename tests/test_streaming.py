@@ -838,7 +838,7 @@ def test_streaming_vector_index_append(spark, sf_dir, tmp_path):
 
     from parquet_pipeline_spark.operators.vectors import (
         ivf_centroids,
-        ivf_topk_indexed,
+        ivf_knn_join,
         write_ivf_index,
     )
     from parquet_pipeline_spark.streaming.events import (
@@ -863,7 +863,7 @@ def test_streaming_vector_index_append(spark, sf_dir, tmp_path):
     q = streaming_vector_index_append(stream, cents, idx, str(tmp_path / "ck"))
     q.awaitTermination(120)
 
-    top1 = ivf_topk_indexed(spark, idx, cents, qv, k=1, nprobe=3).first()
+    top1 = ivf_knn_join(spark, idx, cents, [(0, qv)], k=1, nprobe=3).first()
     assert top1["vec_id"] == 880000 and abs(top1["score"] - 1.0) < 1e-6
 
 
@@ -880,7 +880,7 @@ def test_streaming_ivf_pq_append_grows_index_and_refuses_drift(spark, sf_dir, tm
     from parquet_pipeline_spark.operators.vectors import (
         ivf_centroids,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
         read_ivfpq_meta,
     )
@@ -911,12 +911,12 @@ def test_streaming_ivf_pq_append_grows_index_and_refuses_drift(spark, sf_dir, tm
     assert read_ivfpq_meta(idx)["appends"] == 1
     # the streamed vector is a perfect match for query 0's vector:
     # the probe must retrieve it at rank 1
-    top1 = ivf_pq_topk(
+    top1 = ivf_pq_knn_join(
         spark, idx, cents, books,
         corpus.unionByName(
             spark.createDataFrame([(880000, qv)], "vec_id long, embedding array<double>")
         ),
-        0, qv, k=1, nprobe=3,
+        [(0, qv)], k=1, nprobe=3,
     ).first()
     assert top1["vec_id"] == 880000
 

@@ -162,21 +162,32 @@ def test_ann_batch_knn_recall_generated_corpora(spark, seed, n_clusters, noise):
 
 
 @pytest.mark.parametrize("qid", [0, 17, 42])
-def test_ivf_full_probe_exactness_any_query(spark, sf_dir, qid):
+def test_ivf_full_probe_exactness_any_query(spark, sf_dir, tmp_path, qid):
     """IVF with every cell probed must equal exact top-k for ANY
     query vector, not just the fixture-pinned vec_id=0 (a04's
     exactness property is query-independent)."""
-    from parquet_pipeline_spark.operators.vectors import ivf_centroids, ivf_topk
+    from parquet_pipeline_spark.operators.vectors import (
+        exact_knn_join,
+        ivf_centroids,
+        ivf_knn_join,
+        write_ivf_index,
+    )
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id") != qid)
-    qv = _query_vector(spark, sf_dir, vec_id=qid)
-    exact = [r["vec_id"] for r in topk(emb, qv, k=10).collect()]
+    q = [(qid, _query_vector(spark, sf_dir, vec_id=qid))]
+    exact = sorted(tuple(r) for r in exact_knn_join(emb, q, k=10).collect())
     cents = ivf_centroids(emb, k=8)
-    full = [r["vec_id"] for r in ivf_topk(emb, cents, qv, k=10, nprobe=8).collect()]
+    path = str(tmp_path / "ivf")
+    write_ivf_index(emb, cents, path)
+    full = sorted(
+        tuple(r) for r in ivf_knn_join(spark, path, cents, q, k=10, nprobe=8).collect()
+    )
     assert full == exact
     # half-probe keeps a nonzero share of the true top-k
-    half = [r["vec_id"] for r in ivf_topk(emb, cents, qv, k=10, nprobe=4).collect()]
-    assert len(set(half) & set(exact)) / 10 >= 0.2
+    half = {
+        r["vec_id"] for r in ivf_knn_join(spark, path, cents, q, k=10, nprobe=4).collect()
+    }
+    assert len(half & {v for _q, v, _s in exact}) / 10 >= 0.2
 
 
 def test_ann_batch_knn_prunes_clustered_data(spark):
@@ -219,14 +230,15 @@ def test_ann_batch_knn_prunes_clustered_data(spark):
 
 @pytest.mark.parametrize("seed,n_clusters,noise", [(7, 5, 0.05), (23, 3, 0.15)])
 def test_lsh_bucket_topk_recall_generated_corpora(spark, seed, n_clusters, noise):
-    """a01's single-query bucket scan must keep a useful recall floor
-    on corpora the fixture never saw (stretch item 8: the floor must
-    not be fixture-tuned). Query = vector 0; recall of the bucketed
-    top-k measured against exact brute-force top-k over the same
-    corpus, excluding the query itself on both sides."""
+    """a01's single-query bucket candidacy (ann_knn_join at 24 planes
+    in 3 bands, over a one-row query frame) must keep a useful recall
+    floor on corpora the fixture never saw (stretch item 8: the floor
+    must not be fixture-tuned). Query = vector 0; recall of the
+    bucketed top-k measured against exact brute-force top-k over the
+    same corpus, excluding the query itself on both sides."""
     import random
 
-    from parquet_pipeline_spark.operators.vectors import lsh_bucket_topk
+    from parquet_pipeline_spark.operators.vectors import ann_knn_join
 
     rng = random.Random(seed)
     dim, per_cluster, k = 16, 40, 10
@@ -243,8 +255,9 @@ def test_lsh_bucket_topk_recall_generated_corpora(spark, seed, n_clusters, noise
     }
     got = {
         r["vec_id"]
-        for r in lsh_bucket_topk(
-            corpus, query_vec_id=0, dim=dim, k=k, extra_cols=()
+        for r in ann_knn_join(
+            corpus.filter(F.col("vec_id") != 0), queries, dim=dim, k=k,
+            n_planes=24, n_bands=3,
         ).collect()
     }
     recall = len(got & exact) / len(exact)
@@ -286,17 +299,19 @@ def test_mmr_rerank_diversifies_and_is_deterministic(spark):
 
 
 def test_ivf_persisted_index_prunes_and_appends(spark, sf_dir, tmp_path):
-    """The on-disk IVF layout: results equal the in-memory ivf_topk,
+    """The on-disk IVF layout: a one-row probe equals a04's in-memory
+    form (assign every vector, exact top-k over the probed cells),
     the scan reads ONLY probed cell partitions (partition pruning),
     and an appended vector batch is findable without reassigning the
     old corpus."""
     from pyspark.sql import functions as F
 
     from parquet_pipeline_spark.operators.vectors import (
+        _probe_cells,
+        ivf_assign,
         ivf_centroids,
         ivf_index_append,
-        ivf_topk,
-        ivf_topk_indexed,
+        ivf_knn_join,
         write_ivf_index,
     )
 
@@ -308,14 +323,17 @@ def test_ivf_persisted_index_prunes_and_appends(spark, sf_dir, tmp_path):
     path = str(tmp_path / "ivf_index")
     write_ivf_index(corpus, cents, path)
 
-    indexed = ivf_topk_indexed(spark, path, cents, qv, k=10, nprobe=3)
+    indexed = ivf_knn_join(spark, path, cents, [(0, qv)], k=10, nprobe=3)
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cell#" in plan or "cell IN" in plan, plan
-    got = [(r["vec_id"], round(r["score"], 6)) for r in indexed.collect()]
-    want = [
+    got = sorted((r["vec_id"], r["score"]) for r in indexed.collect())
+    probed = ivf_assign(corpus, cents).filter(
+        F.col("cell").isin(_probe_cells(cents, qv, 3))
+    )
+    want = sorted(
         (r["vec_id"], round(r["score"], 6))
-        for r in ivf_topk(corpus, cents, qv, k=10, nprobe=3).collect()
-    ]
+        for r in topk(probed, qv, k=10).collect()
+    )
     assert got == want and len(got) == 10
 
     # incremental append: a synthetic near-query vector must now win
@@ -323,19 +341,17 @@ def test_ivf_persisted_index_prunes_and_appends(spark, sf_dir, tmp_path):
         [(990000, qv, 7)], "vec_id long, embedding array<float>, label int"
     )
     ivf_index_append(new, cents, path)
-    top1 = ivf_topk_indexed(spark, path, cents, qv, k=1, nprobe=3).first()
+    top1 = ivf_knn_join(spark, path, cents, [(0, qv)], k=1, nprobe=3).first()
     assert top1["vec_id"] == 990000 and abs(top1["score"] - 1.0) < 1e-6
 
 
-def test_ivf_knn_join_matches_per_query_ivf_topk(spark, sf_dir, tmp_path):
-    """Batch retrieval through the persisted index must equal
-    running ivf_topk per query (same centroids, same probes), with
-    per-query cell masking keeping each query inside its own probe
-    set."""
+def test_ivf_knn_join_matches_per_query_calls(spark, sf_dir, tmp_path):
+    """Batch retrieval through the persisted index must equal one
+    one-row call per query (same centroids, same probes): per-query
+    cell masking keeps each query inside its own probe set."""
     from parquet_pipeline_spark.operators.vectors import (
         ivf_centroids,
         ivf_knn_join,
-        ivf_topk,
         write_ivf_index,
     )
 
@@ -356,8 +372,10 @@ def test_ivf_knn_join_matches_per_query_ivf_topk(spark, sf_dir, tmp_path):
 
     for q_id, qv in queries:
         want = [
-            (r["vec_id"], round(r["score"], 6))
-            for r in ivf_topk(corpus, cents, qv, k=5, nprobe=3).collect()
+            (r["vec_id"], r["score"])
+            for r in ivf_knn_join(
+                spark, path, cents, [(q_id, qv)], k=5, nprobe=3
+            ).collect()
         ]
         assert sorted(by_q[q_id]) == sorted(want), (q_id, by_q[q_id], want)
     assert len(by_q) == len(queries)
@@ -518,8 +536,7 @@ def test_pq_roundtrip_contracts(spark):
     from parquet_pipeline_spark.operators.vectors import (
         exact_knn_join,
         pq_encode,
-        pq_topk,
-        pq_topk_refined,
+        pq_knn_join,
         pq_train,
     )
 
@@ -551,30 +568,26 @@ def test_pq_roundtrip_contracts(spark):
 
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     # zero-norm query -> empty result, not a crash
-    assert pq_topk(codes, b1, [0.0] * 64, k=5).count() == 0
+    assert pq_knn_join(codes, b1, corpus, [(0, [0.0] * 64)], k=5).count() == 0
     # refine identity: shortlist >= corpus => exact equality
     want = exact_knn_join(corpus, [(0, qv)], k=10)
-    got_df = pq_topk_refined(
-        codes, b1, corpus, 0, qv, k=10, shortlist=n_valid
-    )
+    got_df = pq_knn_join(codes, b1, corpus, [(0, qv)], k=10, shortlist=n_valid)
     assert got_df.exceptAll(want).count() == 0
     assert want.exceptAll(got_df).count() == 0
 
 
 def test_pq_knn_join_matches_solo_path(spark):
     """pq_knn_join (r14: the batched flat-ADC plan the a13 gate
-    rides) must return PER QUERY exactly what the solo
-    pq_topk_refined chain returns — same shortlist cut (the kernel
-    rounds to 6dp before the cut, pq_topk parity), same refine, same
-    tie-breaks — with a shortlist small enough that the ADC cut is
-    real. Also: zero-norm queries drop to an empty result set, and a
-    duplicate code row must not eat shortlist depth when dedup is on."""
+    rides) must return PER QUERY exactly what a one-row call returns
+    — same shortlist cut, same refine, same tie-breaks — with a
+    shortlist small enough that the ADC cut is real. Also: zero-norm
+    queries drop to an empty result set, and a duplicate code row
+    must not eat shortlist depth when dedup is on."""
     from pyspark.sql import functions as F
 
     from parquet_pipeline_spark.operators.vectors import (
         pq_encode,
         pq_knn_join,
-        pq_topk_refined,
         pq_train,
     )
 
@@ -599,12 +612,12 @@ def test_pq_knn_join_matches_solo_path(spark):
     for q_id, qv in qrows:
         solo = [
             (r["vec_id"], r["score"])
-            for r in pq_topk_refined(
-                codes, books, corpus, q_id, qv, k=10, shortlist=40,
+            for r in pq_knn_join(
+                codes, books, corpus, [(q_id, qv)], k=10, shortlist=40,
                 dedup_ids=False,
             ).collect()
         ]
-        assert got[q_id] == solo, q_id
+        assert sorted(got[q_id]) == sorted(solo), q_id
 
     # zero-norm query: dropped, never scored, never crashes
     assert (
@@ -643,7 +656,7 @@ def test_ivf_pq_index_prunes_partitions(spark, tmp_path):
         exact_knn_join,
         ivf_centroids,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
     )
 
@@ -662,8 +675,8 @@ def test_ivf_pq_index_prunes_partitions(spark, tmp_path):
 
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     n = corpus.count()
-    got = ivf_pq_topk(
-        spark, path, cents, books, corpus, 0, qv, k=10,
+    got = ivf_pq_knn_join(
+        spark, path, cents, books, corpus, [(0, qv)], k=10,
         nprobe=len(cents), shortlist=n,
     )
     want = exact_knn_join(corpus, [(0, qv)], k=10)
@@ -683,7 +696,7 @@ def test_ivf_pq_append_lifecycle(spark, tmp_path):
         ivf_centroids,
         ivf_pq_append,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
         read_ivfpq_meta,
     )
@@ -717,9 +730,15 @@ def test_ivf_pq_append_lifecycle(spark, tmp_path):
 
     # and therefore probes answer identically
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    got_inc = ivf_pq_topk(spark, inc_path, cents, books, full, 0, qv, k=10, nprobe=4)
-    got_re = ivf_pq_topk(spark, re_path, cents, books, full, 0, qv, k=10, nprobe=4)
-    assert [tuple(r) for r in got_inc.collect()] == [tuple(r) for r in got_re.collect()]
+    def probe(path):
+        return sorted(
+            tuple(r)
+            for r in ivf_pq_knn_join(
+                spark, path, cents, books, full, [(0, qv)], k=10, nprobe=4
+            ).collect()
+        )
+
+    assert probe(inc_path) == probe(re_path)
 
 
 def test_ivf_pq_knn_join_identity_contract(spark, tmp_path):
@@ -770,8 +789,8 @@ def test_ivf_pq_knn_join_identity_contract(spark, tmp_path):
 
 
 def test_ivf_pq_knn_join_drops_dirty_codes_cell_level(spark, tmp_path):
-    """The batch kernel's validity mask must match pq_topk's F.get
-    contract: code rows that are NULL, truncated, out-of-range, or
+    """The batch kernel's validity mask: code rows that are NULL,
+    truncated, out-of-range, or
     negative are dropped (never retrieved), rows in a cell no query
     probes are never scored, and clean rows' results are
     byte-identical to a clean index."""
@@ -836,7 +855,7 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, tmp_path):
         ivf_pq_append,
         ivf_pq_compact,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
         read_ivfpq_meta,
     )
@@ -865,9 +884,15 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, tmp_path):
     rows_before = spark.read.parquet(path).count()
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 600))
-    got_before = ivf_pq_topk(
-        spark, path, cents, books, corpus, 0, qv, k=10, nprobe=4
-    ).collect()
+    def probe():
+        return sorted(
+            tuple(r)
+            for r in ivf_pq_knn_join(
+                spark, path, cents, books, corpus, [(0, qv)], k=10, nprobe=4
+            ).collect()
+        )
+
+    got_before = probe()
     assert any(n > 1 for n in files_by_dir().values())  # appends fragmented it
 
     n_files = ivf_pq_compact(spark, path)
@@ -878,10 +903,7 @@ def test_ivf_pq_compact_restores_one_file_per_cell(spark, tmp_path):
     meta = read_ivfpq_meta(path)
     assert meta["codebook_hash"] == fp_before
     assert meta["appends"] == 0 and meta["compactions"] == 1
-    got_after = ivf_pq_topk(
-        spark, path, cents, books, corpus, 0, qv, k=10, nprobe=4
-    ).collect()
-    assert [tuple(r) for r in got_after] == [tuple(r) for r in got_before]
+    assert probe() == got_before
 
 
 def test_ivf_pq_append_refuses_drifted_models(spark, tmp_path):
@@ -945,43 +967,48 @@ def test_ivf_pq_append_refuses_drifted_models(spark, tmp_path):
 
 def test_ivf_pq_build_cache_reuses_index(spark):
     """Build-once-probe-many (VERDICT r11 item 3): the same
-    (corpus key, params) returns the SAME built artifact — repeat
-    registry/bench runs time the probe, not the build."""
+    (kind, corpus key, params) returns the SAME built artifact —
+    repeat registry/bench runs time the probe, not the build."""
+    from functools import partial
+
     from pyspark.sql import functions as F
 
-    from parquet_pipeline_spark.operators.vectors import (
-        _IVFPQ_BUILD_CACHE,
-        ivf_pq_build_cached,
-    )
+    from parquet_pipeline_spark.operators import vectors as V
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 300))
     key = ("test-cache", 5, 300)
-    before = dict(_IVFPQ_BUILD_CACHE)
+    build = partial(V._ivf_pq_artifact, corpus)
+    before = dict(V._BUILD_CACHE)
     try:
-        p1, c1, b1 = ivf_pq_build_cached(corpus, key, k_cells=4, m=8, k_codes=16, sample=128)
-        p2, c2, b2 = ivf_pq_build_cached(corpus, key, k_cells=4, m=8, k_codes=16, sample=128)
+        p1, c1, b1 = V._build_cached("ivf_pq", key, (4, 8, 16, 128), build)
+        p2, c2, b2 = V._build_cached("ivf_pq", key, (4, 8, 16, 128), build)
         assert p1 == p2 and c1 is c2 and b1 is b2
         # different params -> different artifact
-        p3, _, _ = ivf_pq_build_cached(corpus, key, k_cells=2, m=8, k_codes=16, sample=128)
+        p3, _, _ = V._build_cached("ivf_pq", key, (2, 8, 16, 128), build)
         assert p3 != p1
     finally:
-        _IVFPQ_BUILD_CACHE.clear()
-        _IVFPQ_BUILD_CACHE.update(before)
+        V._BUILD_CACHE.clear()
+        V._BUILD_CACHE.update(before)
 
 
 def test_pq_topk_corrupt_codes_are_cell_level(spark):
-    """The ADC scan's dirty-row contract: out-of-range, negative, or
-    truncated code arrays score NULL and are DROPPED — one corrupt
-    index row must neither abort the scan (ANSI element_at) nor
-    silently index from the array end (negative element_at) — and
-    clean rows' scores are untouched."""
-    import numpy as np
+    """The ADC kernel's dirty-row contract: out-of-range, negative,
+    truncated or NULL code arrays are DROPPED — one corrupt index row
+    must neither abort the scan nor silently index from the LUT's end
+    (a negative code) — and clean rows' results are untouched. The
+    corrupt rows' ids carry the query's own vector in the refine
+    corpus and the shortlist covers every row, so any corrupt row
+    that survived the kernel would come back at rank 1."""
     from pyspark.sql import functions as F
 
-    from parquet_pipeline_spark.operators.vectors import pq_encode, pq_topk, pq_train
+    from parquet_pipeline_spark.operators.vectors import (
+        pq_encode,
+        pq_knn_join,
+        pq_train,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -989,22 +1016,35 @@ def test_pq_topk_corrupt_codes_are_cell_level(spark):
     corpus = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 200))
     books = pq_train(corpus, m=8, k_codes=16, sample=128)
     codes = pq_encode(corpus, books)
-    qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    clean = {r["vec_id"]: r["score_pq"] for r in pq_topk(codes, books, qv, k=50).collect()}
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
     dirty_rows = [
         (900001, [999, 0, 0, 0, 0, 0, 0, 0]),   # out of range
-        (900002, [-1, 0, 0, 0, 0, 0, 0, 0]),    # element_at would abort (index 0)
-        (900003, [-4, 0, 0, 0, 0, 0, 0, 0]),    # element_at would SILENTLY wrap
+        (900002, [-1, 0, 0, 0, 0, 0, 0, 0]),    # negative
+        (900003, [-4, 0, 0, 0, 0, 0, 0, 0]),    # would wrap from the end
         (900004, [0, 0, 0]),                     # truncated (m=8 expected)
         (900005, None),                          # null codes
     ]
     dirty = codes.unionByName(
         spark.createDataFrame(dirty_rows, "vec_id long, codes array<int>")
     )
-    got = {r["vec_id"]: r["score_pq"] for r in pq_topk(dirty, books, qv, k=50).collect()}
-    assert not any(v >= 900001 for v in got), "corrupt row retrieved"
-    assert got == clean  # clean scores byte-identical
+    refine = corpus.unionByName(
+        spark.createDataFrame(
+            [(v, qv) for v, _c in dirty_rows], "vec_id long, embedding array<double>"
+        )
+    )
+
+    def probe(table):
+        return sorted(
+            tuple(r)
+            for r in pq_knn_join(
+                table, books, refine, [(0, qv)], k=10, shortlist=400
+            ).collect()
+        )
+
+    got = probe(dirty)
+    assert not any(r[1] >= 900001 for r in got), "corrupt row retrieved"
+    assert got == probe(codes) and len(got) == 10  # clean results identical
 
 
 @pytest.mark.parametrize("seed", [7, 103])
@@ -1013,8 +1053,9 @@ def test_ivf_pq_replayed_append_cannot_corrupt_probes(spark, tmp_path, seed):
     """The at-least-once replay contract the docstrings promise
     (VERDICT r12 item 2): appending the SAME batch twice — the state a
     crash between the append and the checkpoint commit leaves behind —
-    must not change ANY probe answer. Every probe path (pq_topk,
-    ivf_pq_topk, ivf_pq_knn_join) returns k DISTINCT ids identical to
+    must not change ANY probe answer. Every probe shape (a flat
+    pq_knn_join over the littered codes, one-row and batched
+    ivf_pq_knn_join) returns k DISTINCT ids identical to
     the clean index's, and ivf_pq_compact reclaims the duplicate rows
     (row count back to the clean index's) while preserving answers."""
     from pyspark.sql import functions as F
@@ -1025,7 +1066,7 @@ def test_ivf_pq_replayed_append_cannot_corrupt_probes(spark, tmp_path, seed):
         ivf_pq_compact,
         ivf_pq_index,
         ivf_pq_knn_join,
-        ivf_pq_topk,
+        pq_knn_join,
         pq_train,
     )
 
@@ -1073,26 +1114,23 @@ def test_ivf_pq_replayed_append_cannot_corrupt_probes(spark, tmp_path, seed):
     for q, vids in per_q.items():
         assert len(vids) == len(set(vids)) == 10, (q, vids)
 
-    # single-query probe path (pq_topk shortlist under the hood)
-    q0, qv0 = qrows[0]
+    # one-row probe
     tk_clean = snap_rows(
-        ivf_pq_topk(spark, clean_path, cents, books, full, q0, qv0, k=10, nprobe=8)
+        ivf_pq_knn_join(spark, clean_path, cents, books, full, qrows[:1], k=10, nprobe=8)
     )
     tk_replay = snap_rows(
-        ivf_pq_topk(spark, replay_path, cents, books, full, q0, qv0, k=10, nprobe=8)
+        ivf_pq_knn_join(spark, replay_path, cents, books, full, qrows[:1], k=10, nprobe=8)
     )
     assert tk_replay == tk_clean
     assert len({r[1] for r in tk_replay}) == 10
 
-    # direct ADC top-k over the duplicated codes: still k distinct ids
-    from parquet_pipeline_spark.operators.vectors import pq_topk
-
+    # flat ADC over the duplicated codes (no cells): still k distinct ids
     codes_clean = spark.read.parquet(clean_path)
     codes_replay = spark.read.parquet(replay_path)
-    pt_clean = snap_rows(pq_topk(codes_clean, books, qv0, k=10))
-    pt_replay = snap_rows(pq_topk(codes_replay, books, qv0, k=10))
+    pt_clean = snap_rows(pq_knn_join(codes_clean, books, full, qrows[:1], k=10))
+    pt_replay = snap_rows(pq_knn_join(codes_replay, books, full, qrows[:1], k=10))
     assert pt_replay == pt_clean
-    assert len({r[0] for r in pt_replay}) == 10
+    assert len({r[1] for r in pt_replay}) == 10
 
     # compaction reclaims the replay litter and preserves answers
     ivf_pq_compact(spark, replay_path)
@@ -1281,12 +1319,12 @@ def test_ivf_pq_compact_recovers_from_crashed_swap(spark, tmp_path, monkeypatch)
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
 
     def probe():
-        return [
+        return sorted(
             tuple(r)
-            for r in V.ivf_pq_topk(
-                spark, path, cents, books, full, 0, qv, k=10, nprobe=4
+            for r in V.ivf_pq_knn_join(
+                spark, path, cents, books, full, [(0, qv)], k=10, nprobe=4
             ).collect()
-        ]
+        )
 
     before = probe()
 
@@ -1346,7 +1384,7 @@ def test_ivf_pq_compact_skew_controls(spark, tmp_path):
         ivf_pq_append,
         ivf_pq_compact,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
         read_ivfpq_meta,
     )
@@ -1365,12 +1403,15 @@ def test_ivf_pq_compact_skew_controls(spark, tmp_path):
     ivf_pq_append(spark, path, batch, cents, books)  # replay litter too
 
     qv = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    before = [
-        tuple(r)
-        for r in ivf_pq_topk(
-            spark, path, cents, books, full, 0, qv, k=10, nprobe=4
-        ).collect()
-    ]
+    def knn():
+        return sorted(
+            tuple(r)
+            for r in ivf_pq_knn_join(
+                spark, path, cents, books, full, [(0, qv)], k=10, nprobe=4
+            ).collect()
+        )
+
+    before = knn()
     n_unique = (
         spark.read.parquet(path).count()
         - batch.filter(F.col("embedding").isNotNull()).count()
@@ -1397,13 +1438,7 @@ def test_ivf_pq_compact_skew_controls(spark, tmp_path):
 
     # replay litter reclaimed, answers byte-identical, meta reset
     assert spark.read.parquet(path).count() == n_unique
-    after = [
-        tuple(r)
-        for r in ivf_pq_topk(
-            spark, path, cents, books, full, 0, qv, k=10, nprobe=4
-        ).collect()
-    ]
-    assert after == before
+    assert knn() == before
     meta = read_ivfpq_meta(path)
     assert meta["appends"] == 0 and meta["compactions"] == 1
 
@@ -1479,8 +1514,8 @@ def test_ivf_pq_knn_join_small_probe_pool_stays_masked(spark, tmp_path):
 def test_pq_knn_join_boundary_crowding_duplicates(spark):
     """ADVICE r14 (medium): the batched ADC kernel's per-batch cut
     counted ROWS, so duplicate copies of a high-ranking id could each
-    eat a shortlist slot and evict a distinct id the solo pq_topk path
-    (dedup before its global limit) would keep. Adversarial shape: the
+    eat a shortlist slot and evict a distinct id a clean index would
+    keep. Adversarial shape: the
     ADC-top id duplicated 10× in ONE partition (one Arrow batch) with
     shortlist == k — without the in-kernel collapse the whole per-batch
     shortlist is copies of one id and the final result collapses to a
@@ -1490,7 +1525,6 @@ def test_pq_knn_join_boundary_crowding_duplicates(spark):
     from parquet_pipeline_spark.operators.vectors import (
         pq_encode,
         pq_knn_join,
-        pq_topk,
         pq_train,
     )
 
@@ -1506,9 +1540,13 @@ def test_pq_knn_join_boundary_crowding_duplicates(spark):
     ]
 
     # duplicate each query's ADC-top id 10× and squeeze into ONE batch
+    # a shortlist of 1 is the ADC-top id
     top_ids = {
-        int(pq_topk(codes, books, qv, k=1).first()["vec_id"])
-        for _q, qv in qrows
+        int(
+            pq_knn_join(codes, books, corpus, [(q, qv)], k=1, shortlist=1)
+            .first()["vec_id"]
+        )
+        for q, qv in qrows
     }
     litter = codes.filter(F.col("vec_id").isin(list(top_ids)))
     dup = codes
@@ -1562,9 +1600,13 @@ def test_ivf_pq_knn_join_boundary_crowding_duplicates(spark, tmp_path):
     ]
 
     idx = spark.read.parquet(clean_path)  # (vec_id, codes) + cell
+    # a shortlist of 1 is the ADC-top id
     top_ids = {
-        int(V.pq_topk(idx, books, qv, k=1).first()["vec_id"])
-        for _q, qv in qrows
+        int(
+            V.pq_knn_join(idx, books, corpus, [(q, qv)], k=1, shortlist=1)
+            .first()["vec_id"]
+        )
+        for q, qv in qrows
     }
     litter = idx.filter(F.col("vec_id").isin(list(top_ids)))
     dup = idx
@@ -1600,8 +1642,8 @@ def test_ivf_pq_knn_join_boundary_crowding_duplicates(spark, tmp_path):
 def test_batched_probe_warns_on_zero_norm_queries(spark, tmp_path, caplog):
     """VERDICT r14 nit: zero-norm query vectors are dropped by
     contract (cosine undefined), but silently — an all-zero batch
-    returned an empty frame with no trace. Both batched probes now
-    log ONE warning naming the dropped q_ids."""
+    returned an empty frame with no trace. Every batch probe shares
+    one query prep that logs ONE warning naming the dropped q_ids."""
     import logging
 
     from pyspark.sql import functions as F
@@ -1638,6 +1680,15 @@ def test_batched_probe_warns_on_zero_norm_queries(spark, tmp_path, caplog):
     warn = [r for r in caplog.records if "zero-norm" in r.getMessage()]
     assert len(warn) == 1 and "ivf_pq_knn_join" in warn[0].getMessage()
 
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="parquet_pipeline_spark.operators.vectors"):
+        out = V.exact_knn_join(corpus, qrows, k=3).collect()
+    assert {r["q_id"] for r in out} == {0}
+    warn = [r for r in caplog.records if "zero-norm" in r.getMessage()]
+    assert len(warn) == 1
+    assert "exact_knn_join" in warn[0].getMessage()
+    assert "[7, 9]" in warn[0].getMessage()
+
 
 def test_ivf_pq_stats_recovers_from_crashed_swap(spark, tmp_path):
     """ADVICE r14 (low): the maintenance-DECISION tool gets the same
@@ -1667,49 +1718,56 @@ def test_ivf_pq_stats_recovers_from_crashed_swap(spark, tmp_path):
 
 
 def test_build_caches_invalidate_on_corpus_regeneration(spark, tmp_path):
-    """ADVICE r14 (low): the build caches key on (sf_dir, bounds,
-    params) — regenerating the data under a cached sf_dir used to
-    serve stale codes. The key now folds in the embeddings parquet's
-    (mtime_ns, size) fingerprint, so a rewrite misses the cache."""
+    """The ONE build cache, keyed (kind, cache_key, params) with the
+    corpus fingerprint in the value: a repeat build under one key is
+    a hit that starts no Spark job; after the fingerprinted
+    embeddings.parquet is rewritten (ADVICE r14 low: stale codes used
+    to be served) the next build REPLACES the entry — the cache does
+    not grow — and removes the stale artifact's scratch dir."""
+    import os
     import shutil
+    from functools import partial
 
-    from parquet_pipeline_spark.operators.vectors import (
-        _IVFPQ_BUILD_CACHE,
-        _PQ_BUILD_CACHE,
-        ivf_pq_build_cached,
-        pq_build_cached,
-    )
+    from parquet_pipeline_spark.operators import vectors as V
 
     sf_dir = str(tmp_path / "corpus")
-    src = "/root/testdata/sf0.001/embeddings.parquet"
-    import os
-
     os.makedirs(sf_dir)
-    shutil.copy(src, os.path.join(sf_dir, "embeddings.parquet"))
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    target = os.path.join(sf_dir, "embeddings.parquet")
+    shutil.copy("/root/testdata/sf0.001/embeddings.parquet", target)
+    emb = spark.read.parquet(target)
+    key = (os.path.realpath(sf_dir), 0, 100)
+    pq = partial(V._pq_artifact, emb)
+    ivf = partial(V._ivf_pq_artifact, emb)
+    sc = spark.sparkContext
 
-    pq_before, ivf_before = dict(_PQ_BUILD_CACHE), dict(_IVFPQ_BUILD_CACHE)
+    before = dict(V._BUILD_CACHE)
+    V._BUILD_CACHE.clear()
     try:
-        key = (os.path.realpath(sf_dir), "fp-test", 0, 100)
-        b1, p1 = pq_build_cached(emb, key, m=8, k_codes=16, sample=64)
-        b2, p2 = pq_build_cached(emb, key, m=8, k_codes=16, sample=64)
-        assert p1 == p2 and b1 is b2  # same fingerprint: cache hit
-        ip1, ic1, _ = ivf_pq_build_cached(emb, key, k_cells=2, m=8, k_codes=16, sample=64)
-        ip2, ic2, _ = ivf_pq_build_cached(emb, key, k_cells=2, m=8, k_codes=16, sample=64)
-        assert ip2 == ip1 and ic2 is ic1  # same fingerprint: cache hit
+        b1, p1 = V._build_cached("pq", key, (8, 16, 64), pq)
+        ip1, ic1, _ = V._build_cached("ivf_pq", key, (2, 8, 16, 64), ivf)
+        sc.setJobGroup("build-cache-hit", "repeat builds")
+        try:
+            b2, p2 = V._build_cached("pq", key, (8, 16, 64), pq)
+            ip2, ic2, _ = V._build_cached("ivf_pq", key, (2, 8, 16, 64), ivf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert p2 == p1 and b2 is b1 and ip2 == ip1 and ic2 is ic1
+        assert list(sc.statusTracker().getJobIdsForGroup("build-cache-hit")) == []
+        stale = {k: v[1] for k, v in V._BUILD_CACHE.items()}
+        assert len(stale) == 2
 
         # regenerate the corpus in place (mtime changes)
-        target = os.path.join(sf_dir, "embeddings.parquet")
-        os.utime(target, ns=(os.stat(target).st_atime_ns, os.stat(target).st_mtime_ns + 1_000_000))
-        b3, p3 = pq_build_cached(emb, key, m=8, k_codes=16, sample=64)
-        assert p3 != p1  # fresh build, not the stale artifact
-        ip3, _, _ = ivf_pq_build_cached(emb, key, k_cells=2, m=8, k_codes=16, sample=64)
-        assert ip3 != ip1
+        st = os.stat(target)
+        os.utime(target, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+        b3, p3 = V._build_cached("pq", key, (8, 16, 64), pq)
+        ip3, _, _ = V._build_cached("ivf_pq", key, (2, 8, 16, 64), ivf)
+        assert p3 != p1 and ip3 != ip1  # fresh builds, not stale artifacts
+        assert set(V._BUILD_CACHE) == set(stale)  # replaced, not added
+        assert all(not os.path.exists(d) for d in stale.values())
+        assert os.path.exists(p3) and os.path.exists(ip3)
     finally:
-        _PQ_BUILD_CACHE.clear()
-        _PQ_BUILD_CACHE.update(pq_before)
-        _IVFPQ_BUILD_CACHE.clear()
-        _IVFPQ_BUILD_CACHE.update(ivf_before)
+        V._BUILD_CACHE.clear()
+        V._BUILD_CACHE.update(before)
 
 
 def test_ivf_pq_knn_join_scope_steering(spark, tmp_path):
@@ -1978,12 +2036,10 @@ def test_ivf_centroids_replicated_ids_dedup(spark):
     assert len(seen) == k
 
 
-def test_sq8_kernel_and_codegen_backends_identical(spark):
-    """r15 ladder finding: the all-JVM codegen scoring is an HOF trap
-    at scale (interpreted lambda per array element), so the default
-    backend is an Arrow kernel (one matmul per batch). Both backends
-    must return byte-identical results — on clean codes AND on a
-    dirty-littered table."""
+def test_sq8_kernel_drops_dirty_code_rows(spark):
+    """The SQ8 Arrow kernel (one matmul per batch) skips NULL,
+    wrong-length and zero-norm code rows: a dirty-littered table
+    returns byte-identical results to the clean one, full depth."""
     from pyspark.sql import functions as F
 
     from parquet_pipeline_spark.operators.vectors import (
@@ -2008,20 +2064,16 @@ def test_sq8_kernel_and_codegen_backends_identical(spark):
             "vec_id long, codes array<smallint>, norm_r double",
         )
     )
-    for table in (codes, dirty):
-        kernel = sorted(
+    clean, got = (
+        sorted(
             tuple(r)
             for r in sq8_knn_join(
                 table, bounds, corpus, qrows, k=10, shortlist=50
             ).collect()
         )
-        cg = sorted(
-            tuple(r)
-            for r in sq8_knn_join(
-                table, bounds, corpus, qrows, k=10, shortlist=50, codegen=True
-            ).collect()
-        )
-        assert kernel == cg and len(kernel) == 30
+        for table in (codes, dirty)
+    )
+    assert got == clean and len(got) == 30
 
 
 def test_sq8_train_survives_dirty_dimension_rows(spark):

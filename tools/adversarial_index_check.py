@@ -122,7 +122,7 @@ def check_ivfpq_index(spark, tmp, rng) -> list[str]:
         ivf_centroids,
         ivf_pq_append,
         ivf_pq_index,
-        ivf_pq_topk,
+        ivf_pq_knn_join,
         pq_train,
     )
 
@@ -139,12 +139,12 @@ def check_ivfpq_index(spark, tmp, rng) -> list[str]:
     clean_path = os.path.join(tmp, "pq_clean")
     ivf_pq_index(corpus, cents, books, clean_path)
     full_probe = dict(nprobe=len(cents), k=10, shortlist=500)
-    clean = [
+    clean = sorted(
         tuple(r)
-        for r in ivf_pq_topk(
-            spark, clean_path, cents, books, corpus, 0, qv, **full_probe
+        for r in ivf_pq_knn_join(
+            spark, clean_path, cents, books, corpus, [(0, qv)], **full_probe
         ).collect()
-    ]
+    )
 
     # cell-level dirt: corrupt code rows + rows in an unknown cell.
     # Injected the hostile way — straight into the parquet tree, not
@@ -165,34 +165,36 @@ def check_ivfpq_index(spark, tmp, rng) -> list[str]:
     )
     dirty_rows.write.mode("append").partitionBy("cell").parquet(dirty_path)
     try:
-        got = [
+        got = sorted(
             tuple(r)
-            for r in ivf_pq_topk(
-                spark, dirty_path, cents, books, corpus, 0, qv, **full_probe
+            for r in ivf_pq_knn_join(
+                spark, dirty_path, cents, books, corpus, [(0, qv)], **full_probe
             ).collect()
-        ]
-        if any(row[0] >= 800001 for row in got):
+        )
+        if any(row[1] >= 800001 for row in got):
             errs.append("corrupt/unknown-cell code row was retrieved")
         elif got != clean:
             errs.append("cell-level dirt changed CLEAN rows' results")
     except Exception as e:  # noqa: BLE001
         errs.append(f"cell-level code dirt aborted the probe: {type(e).__name__}")
 
-    # same contract through the BATCHED probe (r12, a17): its numpy
-    # validity mask must drop exactly what pq_topk's F.get drops
-    from parquet_pipeline_spark.operators.vectors import ivf_pq_knn_join
-
+    # same contract for a multi-query batch (r12, a17): every query
+    # of the batch drops the same dirt
+    qrows = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in emb.filter(F.col("vec_id") < 3).collect()
+    ]
     try:
         clean_b = sorted(
             tuple(r)
             for r in ivf_pq_knn_join(
-                spark, clean_path, cents, books, corpus, [(0, qv)], **full_probe
+                spark, clean_path, cents, books, corpus, qrows, **full_probe
             ).collect()
         )
         got_b = sorted(
             tuple(r)
             for r in ivf_pq_knn_join(
-                spark, dirty_path, cents, books, corpus, [(0, qv)], **full_probe
+                spark, dirty_path, cents, books, corpus, qrows, **full_probe
             ).collect()
         )
         if any(row[1] >= 800001 for row in got_b):
@@ -207,7 +209,9 @@ def check_ivfpq_index(spark, tmp, rng) -> list[str]:
     ivf_pq_index(corpus, cents, books, trunc_path)
     _truncate_one_parquet(trunc_path, rng)
     try:
-        ivf_pq_topk(spark, trunc_path, cents, books, corpus, 0, qv, **full_probe).collect()
+        ivf_pq_knn_join(
+            spark, trunc_path, cents, books, corpus, [(0, qv)], **full_probe
+        ).collect()
         errs.append("truncated PQ index probed silently")
     except Exception:  # noqa: BLE001
         pass
@@ -263,7 +267,6 @@ def check_replayed_append(spark, tmp, rng) -> list[str]:
         ivf_pq_compact,
         ivf_pq_index,
         ivf_pq_knn_join,
-        ivf_pq_topk,
         pq_train,
     )
 
@@ -315,11 +318,10 @@ def check_replayed_append(spark, tmp, rng) -> list[str]:
         if len(vids) != k:
             errs.append(f"batched probe returned {len(vids)} ids for q {q}, want {k}")
 
-    q0, qv0 = qrows[0]
     tk = lambda p: sorted(
         tuple(r)
-        for r in ivf_pq_topk(
-            spark, p, cents, books, full, q0, qv0, k=k, nprobe=nprobe
+        for r in ivf_pq_knn_join(
+            spark, p, cents, books, full, qrows[:1], k=k, nprobe=nprobe
         ).collect()
     )
     if tk(replay_path) != tk(clean_path):
@@ -515,9 +517,9 @@ def check_filtered_recall_geometry(spark, tmp, rng) -> list[str]:
       mass is exactly what ivf_pq_stats-style introspection exposes),
       never the shortlist."""
     from parquet_pipeline_spark.operators.vectors import (
+        _gate_artifact,
         exact_knn_join,
         ivf_assign,
-        ivf_pq_build_cached,
         ivf_pq_knn_join,
     )
 
@@ -535,14 +537,7 @@ def check_filtered_recall_geometry(spark, tmp, rng) -> list[str]:
         ]
         # one index per fixture, shared across every fraction (the
         # gate's own cached build — same params as a15/a18)
-        path, cents, books = ivf_pq_build_cached(
-            corpus,
-            cache_key=(os.path.realpath(sf_dir), "a15", 5, 2000),
-            k_cells=16,
-            m=8,
-            k_codes=256,
-            sample=2048,
-        )
+        path, cents, books = _gate_artifact("ivf_pq", corpus, sf_dir, 5, 2000)
 
         def min_recall(eligible, nprobe, extra_cells=None, shortlist=200):
             exact_ids: dict[int, set] = {}
